@@ -137,7 +137,7 @@ def ngram_jaccard_pairs(
         .groupBy("_id")
         .agg(F.array_sort(
             F.array_distinct(F.flatten(F.collect_list("gs")))).alias("gs"))
-        .withColumn("ng", F.size("gs"))
+        .withColumn("ng", F.size("gs").cast("bigint"))
     )
     if materialize:
         docsets = docsets.persist()

@@ -13,19 +13,28 @@ Stopping rule: after exploring every cell within Chebyshev cell-distance
 cell at Chebyshev >= s+1 is >= s full cell widths away). So a query is
 DONE once its current kth-best distance <= s * cell_width.
 
-Plan shape per round (driver loop, one round per `s`):
-  pending queries --explode ring(s) cells--> (query, cell)   [tiny side]
-  points(cell)    --broadcast-join cell--> candidates
-                  --window row_number per query (d2, id)--> top-k
+Plan shape: the query projection is collected once (Spark computes its
+mercator and cell columns, so every distance is a Spark double). The
+loop state — pending queries and their carried top-k, |Q|*k rows — lives
+on the driver, and each round runs ONE Spark action:
+  (pending query, annulus cell)   [driver-built Arrow local relation]
+  points(cell) --broadcast-join cell--> d2
+               --union carried top-k--> row_number per query (d2, id) <= k
+               --collect-->  driver compares each kth d2 with the bound
 Queries are few relative to points (the gdalgrid model: one output grid
 node per cell vs millions of scattered points), so the query side is
-always the broadcast side and the big point table is NEVER shuffled —
-only scanned, once per round, with cell-prefilter pushdown.
+always the broadcast side and the big point table is NEVER shuffled or
+cached — only scanned, once per round, with cell-prefilter pushdown.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import math
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import tiles as TF
 
@@ -39,12 +48,24 @@ def _cell_xy(lon, lat, res: int):
     return TF.clamp(tx, 0, lim), TF.clamp(TF.xyz_ty(ty_tms, res), 0, lim)
 
 
+def _merc_cells(df: DataFrame, id_col: str, lon: str, lat: str, res: int, p: str) -> DataFrame:
+    """(_{p}id, _{p}mx, _{p}my, _{p}cx, _{p}cy): id, mercator meters, cell."""
+    cx, cy = _cell_xy(F.col(lon), F.col(lat), res)
+    return df.select(
+        F.col(id_col).alias(f"_{p}id"),
+        TF.merc_mx(F.col(lon)).alias(f"_{p}mx"),
+        TF.merc_my(F.col(lat)).alias(f"_{p}my"),
+        cx.alias(f"_{p}cx"),
+        cy.alias(f"_{p}cy"),
+    )
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
     *,
     k: int = 5,
-    res: int = 5,
+    res: int | None = None,
     point_id: str = "point_id",
     query_id: str = "query_id",
     lon: str = "lon",
@@ -54,137 +75,79 @@ def knn_join(
     """Exact kNN of each query against `points`.
 
     Returns (query_id, point_id, rank) with rank 1..k ordered by squared
-    mercator-meter distance, ties by point_id. Both inputs need lon/lat
-    columns named per the kw args.
+    mercator-meter distance, ties by point_id; the id columns keep their
+    input types and rank is int. Both inputs need lon/lat columns named
+    per the kw args. `res=None` derives the cell resolution from
+    `points.count()` and `k`. If `max_rounds` stops the
+    loop early, only the finished queries are returned.
+
+    Caching: the operator owns no cache. `points` is evaluated once for
+    the count (when `res` is None) and once per round, `queries` once; a
+    caller with an expensive upstream plan persists it first.
     """
     spark = points.sparkSession
+    if res is None:  # about 6k points per cell (4^res cells), clamped to [1, 16]
+        res = min(16, max(1, round(math.log(max(points.count(), 1) / (6 * k), 4))))
     w = 2.0 * ORIGIN_SHIFT / float(2**res)
     lim = 2**res - 1
-
-    pcx, pcy = _cell_xy(F.col(lon), F.col(lat), res)
-    # persisted: every round probes this projection; without the cache
-    # each round re-scans the source and recomputes the mercator/cell
-    # math (measured as the dominant per-round cost at small SF)
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        TF.merc_mx(F.col(lon)).alias("_pmx"),
-        TF.merc_my(F.col(lat)).alias("_pmy"),
-        pcx.alias("_pcx"),
-        pcy.alias("_pcy"),
-    ).persist()
-    qcx, qcy = _cell_xy(F.col(lon), F.col(lat), res)
-    pending = queries.select(
-        F.col(query_id).alias("_qid"),
-        TF.merc_mx(F.col(lon)).alias("_qmx"),
-        TF.merc_my(F.col(lat)).alias("_qmy"),
-        qcx.alias("_qcx"),
-        qcy.alias("_qcy"),
-    )
-
     if max_rounds is None:
         max_rounds = lim + 2
 
-    results = None   # accumulated top-k per finished query
-    carried = None   # previous rounds' top-k for still-pending queries
-    s = 1
-    prev_s = 0
-    rounds = 0
-    # persisted frames released at the end (topk feeds `results`, so
-    # per-round topk caches must live until the output is materialized)
-    _topks: list[DataFrame] = []
-    _prev_pending: DataFrame | None = None
-    _prev_carried: DataFrame | None = None
-    while rounds < max_rounds:
-        rounds += 1
+    pts = _merc_cells(points, point_id, lon, lat, res, "p")
+    qsdf = _merc_cells(queries, query_id, lon, lat, res, "q")
+    qf, pf = qsdf.schema["_qid"], pts.schema["_pid"]
+    pending = qsdf.toPandas()
+    qcells_schema = T.StructType(  # (_qid, _qmx, _qmy) + the ring cell
+        qsdf.schema.fields[:3] + [T.StructField(c, T.LongType(), False) for c in ("_cx", "_cy")])
+    topk_schema = T.StructType([qf, pf, T.StructField("_d2", T.DoubleType(), False)])
+    win = Window.partitionBy("_qid").orderBy(F.col("_d2").asc(), F.col("_pid").asc())
+    d2 = ((F.col("_pmx") - F.col("_qmx")) * (F.col("_pmx") - F.col("_qmx"))
+          + (F.col("_pmy") - F.col("_qmy")) * (F.col("_pmy") - F.col("_qmy")))
+
+    finished: list[pd.DataFrame] = []
+    carried = pd.DataFrame()  # earlier rounds' top-k of the still-pending queries
+    s, prev_s = 1, -1
+    for _ in range(max_rounds):
+        if pending.empty:
+            break
         # ONLY the new annulus: cells with Chebyshev distance in
-        # (prev_s, s] of the query cell. Cells <= prev_s were already
-        # scanned in earlier rounds and their survivors ride forward in
-        # `carried` — no candidate is ever recomputed (the fix for the
-        # re-scan-the-whole-square shape).
-        offs = (
-            spark.range(-s, s + 1).select(F.col("id").alias("_dx"))
-            .crossJoin(spark.range(-s, s + 1).select(F.col("id").alias("_dy")))
-        )
-        if prev_s > 0:  # round 1 includes the center cell (Chebyshev 0)
-            offs = offs.filter(F.greatest(F.abs("_dx"), F.abs("_dy")) > prev_s)
-        qcells = (
-            pending.crossJoin(F.broadcast(offs))
-            .select(
-                "_qid", "_qmx", "_qmy",
-                (F.col("_qcx") + F.col("_dx")).alias("_cx"),
-                (F.col("_qcy") + F.col("_dy")).alias("_cy"),
-            )
-            .filter(
-                (F.col("_cx") >= 0) & (F.col("_cx") <= lim)
-                & (F.col("_cy") >= 0) & (F.col("_cy") <= lim)
-            )
-        )
+        # (prev_s, s] of the query cell; nearer cells' survivors ride
+        # forward in `carried`, so no candidate is ever recomputed.
+        r = np.arange(-min(s, lim), min(s, lim) + 1)  # wider is off-grid for all
+        dx, dy = (a.ravel() for a in np.meshgrid(r, r))
+        ring = np.maximum(np.abs(dx), np.abs(dy)) > prev_s
+        dx, dy = dx[ring], dy[ring]
+        qc = pending.loc[pending.index.repeat(len(dx))].assign(
+            _cx=(pending["_qcx"].to_numpy()[:, None] + dx).ravel(),
+            _cy=(pending["_qcy"].to_numpy()[:, None] + dy).ravel())
+        qc = qc[qc["_cx"].between(0, lim) & qc["_cy"].between(0, lim)]
+        qcells = spark.createDataFrame(qc[qcells_schema.names], qcells_schema)
         cand = pts.join(
             F.broadcast(qcells),
             (pts["_pcx"] == qcells["_cx"]) & (pts["_pcy"] == qcells["_cy"]),
-        ).select(
-            "_qid", "_pid",
-            ((F.col("_pmx") - F.col("_qmx")) * (F.col("_pmx") - F.col("_qmx"))
-             + (F.col("_pmy") - F.col("_qmy")) * (F.col("_pmy") - F.col("_qmy"))
-             ).alias("_d2"),
-        )
-        if carried is not None:
-            cand = carried.select("_qid", "_pid", "_d2").unionByName(cand)
-        win = Window.partitionBy("_qid").orderBy(F.col("_d2").asc(), F.col("_pid").asc())
-        # persist: topk feeds the done-test, the finished rows AND the
-        # final union — without it each round's big candidate join
-        # would be recomputed three times (and re-recomputed by the
-        # caller's action).
-        topk = (
-            cand.withColumn("_rank", F.row_number().over(win))
-            .filter(F.col("_rank") <= k)
-            .persist()
-        )
+        ).select("_qid", "_pid", d2.alias("_d2"))
+        if not carried.empty:
+            cand = cand.unionByName(spark.createDataFrame(carried, topk_schema))
+        topk = (cand.withColumn("_rank", F.row_number().over(win))
+                .filter(F.col("_rank") <= k).toPandas())
         # done <=> k candidates found AND kth distance <= (s*w)^2,
         # or the whole grid has been explored
-        stats = topk.groupBy("_qid").agg(
-            F.count("*").alias("_n"), F.max("_d2").alias("_dk")
-        )
-        bound = float(s) * w
-        whole_grid = s >= lim + 1
-        done_ids = stats.filter(
-            F.lit(whole_grid)
-            | ((F.col("_n") >= k) & (F.col("_dk") <= F.lit(bound * bound)))
-        ).select("_qid")
-        finished = topk.join(F.broadcast(done_ids), "_qid")
-        results = finished if results is None else results.unionByName(finished)
-        pending = pending.join(F.broadcast(done_ids), "_qid", "left_anti").persist()
-        carried = topk.join(F.broadcast(done_ids), "_qid", "left_anti").persist()
-        # materialize the loop state so each round's work runs once
-        n_pending = pending.count()
-        # the count() barrier materialized this round's pending (and
-        # cached topk, from which the new carried derives) — the
-        # previous round's pending/carried caches are now dead weight
-        _topks.append(topk)
-        if _prev_pending is not None:
-            _prev_pending.unpersist()
-        if _prev_carried is not None:
-            _prev_carried.unpersist()
-        _prev_pending, _prev_carried = pending, carried
-        if n_pending == 0:
-            break
-        prev_s = s
-        s *= 2  # geometric growth: few rounds even for isolated queries
+        if s > lim:
+            done = pending["_qid"]
+        else:
+            st = topk.groupby("_qid")["_d2"].agg(["size", "max"])
+            done = st.index[(st["size"] >= k) & (st["max"] <= (s * w) ** 2)]
+        fin = topk["_qid"].isin(done)
+        finished.append(topk[fin])
+        carried = topk.loc[~fin, topk_schema.names]
+        pending = pending[~pending["_qid"].isin(done)]
+        prev_s, s = s, 2 * s  # geometric growth: few rounds even for isolated queries
 
-    out = results.select(
-        F.col("_qid").alias(query_id),
-        F.col("_pid").alias(point_id),
-        F.col("_rank").alias("rank"),
-    )
-    # materialize the (small: |queries| x k rows) result so every
-    # intermediate cache can be dropped NOW — without this, repeated
-    # knn_join calls accumulate executor storage blocks unboundedly
-    out = out.localCheckpoint(eager=True)
-    for t in _topks:
-        t.unpersist()
-    if _prev_pending is not None:
-        _prev_pending.unpersist()
-    if _prev_carried is not None:
-        _prev_carried.unpersist()
-    pts.unpersist()
-    return out
+    out_schema = T.StructType([
+        T.StructField(query_id, qf.dataType, qf.nullable),
+        T.StructField(point_id, pf.dataType, pf.nullable),
+        T.StructField("rank", T.IntegerType(), False),
+    ])
+    out = (pd.concat(finished)[["_qid", "_pid", "_rank"]] if finished
+           else pd.DataFrame(columns=["_qid", "_pid", "_rank"]))
+    return spark.createDataFrame(out.set_axis(out_schema.names, axis=1), out_schema)

@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """`spark.driver.memory` default: min(24g, half of physical RAM), so
+    the driver heap can never outgrow the host; 24g when RAM is unknown."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def get_spark(app: str = "gdal_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -29,7 +40,8 @@ def get_spark(app: str = "gdal_spark", master: str | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("GDAL_SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("GDAL_SPARK_DRIVER_MEM") or default_driver_memory())
         # InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)`
         # under every explode and pushes it to the scan, substituting
         # the generator-input ALIASES into the predicate. Our geometry

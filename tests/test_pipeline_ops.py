@@ -39,6 +39,15 @@ def test_jaccard_pairs(spark, docs_df):
     assert row14["shared"] == row14["na"] == row14["nb"]
 
 
+def test_jaccard_pairs_output_types(spark, docs_df):
+    """The set sizes stay bigint (a persisted-docset rewrite once turned
+    na/nb into int while the values hashed the same)."""
+    out = dedup.ngram_jaccard_pairs(docs_df, n=2, threshold_pct=50)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("id_a", "bigint"), ("id_b", "bigint"), ("shared", "bigint"),
+        ("na", "bigint"), ("nb", "bigint")]
+
+
 def test_minhash_identical_docs_share_all_bands(spark, docs_df):
     out = dedup.minhash_lsh_pairs(docs_df, n_hashes=16, bands=4).toPandas()
     row = out[(out.id_a == 1) & (out.id_b == 4)]
