@@ -85,14 +85,11 @@ def main() -> None:
         # 10^12-row scale the per-job setup amortizes to zero — timing
         # it per-rep would just measure setup/compute ratio at the
         # bench's (much smaller) corpus size
-        # r3-late: the exact stage runs as the pure-JVM HOF crossing
-        # fold (strategy='jvm') — measured ~30% faster than the Arrow
-        # broadcast-dict path on the 64-vertex cover with identical
-        # output; the Arrow twin is timed separately below so the
-        # cross-round series stays comparable
+        # the exact stage is the default broadcast arm's band table
+        # (column arithmetic fused into the hash join, no Python)
         d = spark.read.parquet(doc_path)
         joined = spatial_join_points_in_polygons(
-            d, cov, res=6, strategy="jvm",
+            d, cov, res=6,
             keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
         )
         tiled = tiling.assign_tiles(joined, zoom=12)
@@ -116,21 +113,6 @@ def main() -> None:
         }
         print(json.dumps(out))
         return
-
-    # Arrow-path twin of the headline (one rep, cross-round comparable)
-    d = spark.read.parquet(doc_path)
-    joined = spatial_join_points_in_polygons(
-        d, cov, res=6, strategy="broadcast",
-        keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
-    )
-    sel = tiling.assign_tiles(joined, zoom=12).select(
-        "doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
-    best = float("inf")
-    for _ in range(2):  # best-of-2: single reps were +-10x on this host
-        t0 = time.time()
-        force(sel)
-        best = min(best, time.time() - t0)
-    timings["headline_join_tile_arrow"] = round(best, 3)
 
     # -- Zipfian corpus for the dedup benches (VERDICT r1: the uniform
     # word-soup corpus makes ~56% of pairs genuine candidates, so the

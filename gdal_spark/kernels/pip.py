@@ -23,6 +23,18 @@ from __future__ import annotations
 import numpy as np
 
 
+def closed_ring(ring_xy) -> np.ndarray | None:
+    """The (m, 2) float64 ring point_in_ring tests: closed if it was
+    not, or None when the reference rejects it (fewer than 4 points
+    including the closing one), which makes every point outside."""
+    ring = np.asarray(ring_xy, dtype=np.float64)
+    if ring.shape[0] < 3:
+        return None
+    if ring[0, 0] != ring[-1, 0] or ring[0, 1] != ring[-1, 1]:
+        ring = np.vstack([ring, ring[:1]])
+    return ring if ring.shape[0] >= 4 else None
+
+
 def point_in_ring(xs, ys, ring_xy: np.ndarray, test_envelope: bool = True) -> np.ndarray:
     """Vectorized isPointInRing for many points against ONE ring.
 
@@ -33,13 +45,8 @@ def point_in_ring(xs, ys, ring_xy: np.ndarray, test_envelope: bool = True) -> np
     """
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    ring = np.asarray(ring_xy, dtype=np.float64)
-    if ring.shape[0] < 3:
-        return np.zeros(xs.shape[0], dtype=bool)
-    if ring[0, 0] != ring[-1, 0] or ring[0, 1] != ring[-1, 1]:
-        ring = np.vstack([ring, ring[:1]])
-    # reference: rings with < 4 points (incl. closing) are rejected
-    if ring.shape[0] < 4:
+    ring = closed_ring(ring_xy)
+    if ring is None:
         return np.zeros(xs.shape[0], dtype=bool)
 
     inside = np.zeros(xs.shape[0], dtype=bool)

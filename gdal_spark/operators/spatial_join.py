@@ -8,41 +8,54 @@ spatial filter + layer-algebra joins):
   polygons ──cover explode (cell, poly attrs) ────┘
       → envelope prefilter  (JVM column compare — the bbox stage of
         ogrlayer.cpp:2253-2325 FilterGeometry)
-      → exact ray-cast PIP  (Arrow-batched pandas UDF running the
-        crossing rule of ogrlinearring.cpp:503-531)
+      → exact ray-cast PIP  (the crossing rule of
+        ogrlinearring.cpp:503-531, bit-identical to kernels.pip)
 
 Join strategy:
 - 'broadcast' (default when the cover table is small): the polygon
-  cover is broadcast; NO shuffle of the point side at all — at 10^12
+  side is broadcast; NO shuffle of the point side at all — at 10^12
   rows this is the only acceptable default.
-- 'shuffle': plain equi-join on cell; AQE skew-join splits hot cells.
-- 'salted': point side gets salt = doc_index % n_salt, hot cover cells
-  are replicated n_salt times — explicit skew handling when one cell
-  holds a disproportionate share of points (FIXTURES F3 skew case).
+- 'shuffle' (= 'grouped'): no broadcast; see "Ring transfer" below.
+  'grouped_salted' splits hot (cell, poly_id) cogroups across tasks.
+- 'salted': point side gets salt = hash(lon, lat) % n_salt, hot cover
+  cells are replicated n_salt times (FIXTURES F3 skew case).
 
-Ring transfer: for the broadcast/salted strategies the polygon
+Exact-stage engine of the 'broadcast' strategy, picked from the cover
+itself (_bands_fit, _band_table):
+- Band table (small rings, e.g. countries64, 5-12 vertices): the driver
+  splits each cover row into latitude bands at the ring's vertex ys
+  and keeps, per band, the few edges that straddle all of it. The
+  band table is the broadcast side, and the exact test is
+  `lo <= lat < hi` plus the XOR of at most _BAND_MAX_EDGES
+  point-relative crossing terms — column arithmetic that runs inside
+  the broadcast hash join's whole-stage-codegen method, with no
+  Python and no straddle test (Raptor's scan-line idea: compute a
+  polygon's crossings once, then join the data against them).
+- Arrow y-band kernel (dense rings): when the band table would hold
+  more than _BAND_ROWS_PER_CELL rows per cell key — counted before
+  any band row is built — or a band needs more edge slots, or a ring
+  coordinate is not finite within 1e150. Measured crossover in
+  PLANS.md "band table vs Arrow".
+
+Ring transfer: on the Arrow engine (and 'salted') the polygon
 coordinate arrays are NOT join columns — each candidate row carries
 only poly_id through Arrow, and the exact-stage UDF resolves rings
 from a sparkContext.broadcast({poly_id: ring ndarray}) dict that
-crosses to each executor ONCE. With real layers (10^4-10^5 vertices
-per ring) x millions of candidates per cell, rings-as-columns would
-multiply the UDF input volume by orders of magnitude; the broadcast
-dict makes exact-stage transfer 8 bytes/row regardless of polygon
+crosses to each executor ONCE: 8 bytes/row regardless of polygon
 complexity. When the cover is too big to broadcast at all (10^8
 polygons — exactly the regime where a driver dict is impossible),
-the 'grouped' strategy (= 'shuffle' since r4) ships each ring ONCE
-PER (cell, poly_id) GROUP via a cogrouped applyInPandas: candidates
-shuffle at 24 B + keep-cols per row, rings ride the cogroup's other
-side one copy per group, and the exact stage zips them
-executor-side. The old rings-in-row form ('rowrings') is kept only
-as the measured ablation control (tools/bench_isolated.py):
-64 KiB/candidate at 4096 vertices, 6-30x slower — the cliff the
-grouped form removes.
+the 'grouped' strategy ships each ring ONCE PER (cell, poly_id)
+GROUP via a cogrouped applyInPandas: candidates shuffle at 24 B +
+keep-cols per row, rings ride the cogroup's other side one copy per
+group, and the exact stage zips them executor-side. The old
+rings-in-row form ('rowrings') is kept only as the measured ablation
+control (tools/bench_isolated.py): 64 KiB/candidate at 4096
+vertices, 6-30x slower — the cliff the grouped form removes.
 
 The 3-stage short-circuit order (bbox reject → envelope accept → exact)
-is preserved: envelope compare happens before the pandas UDF, and the
-UDF re-checks the envelope before ray casting (cheap, keeps parity with
-the reference's staged semantics).
+is preserved: the envelope compare happens before the exact test, and
+the Arrow UDF re-checks the envelope before ray casting (cheap, keeps
+parity with the reference's staged semantics).
 """
 
 from __future__ import annotations
@@ -54,7 +67,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import tiles as tile_fns
-from ..kernels.pip import point_in_ring
+from ..kernels import mercator
+from ..kernels.pip import closed_ring, point_in_ring
 
 
 @F.pandas_udf(T.BooleanType())
@@ -78,25 +92,6 @@ def _pip_udf(x: pd.Series, y: pd.Series, poly_id: pd.Series,
         ])
         out[idx] = point_in_ring(xv[idx], yv[idx], ring)
     return pd.Series(out)
-
-
-def _rings_broadcast(cover: DataFrame):
-    """Collect the polygon layer's rings ONCE on the driver and ship
-    them as a spark broadcast {poly_id: (n, 2) float64 ndarray}.
-
-    This is the dimension side of a broadcast join — collecting it is
-    exactly as legitimate as F.broadcast(cover), and it removes the
-    per-candidate-row ring copy from the Arrow transfer (the scale
-    cliff: ring bytes x candidate rows)."""
-    rows = cover.select("poly_id", "xs", "ys").dropDuplicates(["poly_id"]).collect()
-    rings = {
-        int(r["poly_id"]): np.column_stack([
-            np.asarray(r["xs"], dtype=np.float64),
-            np.asarray(r["ys"], dtype=np.float64),
-        ])
-        for r in rows
-    }
-    return cover.sparkSession.sparkContext.broadcast(rings)
 
 
 def _pip_dict_udf(rings_bc):
@@ -524,37 +519,6 @@ def boolean_areas_general(
     )
 
 
-def pip_hof_condition(lon: str, lat: str, xs: str, ys: str):
-    """The exact OGR crossing rule (ogrlinearring.cpp:462-531, the
-    same relative-endpoint form as kernels.pip.point_in_ring) as a
-    pure Spark higher-order-function fold — ZERO Python in the exact
-    stage. Works on open or closed rings (the wrap edge of a closed
-    ring is zero-length and never straddles). Division is guarded by
-    the straddle test (nested CASE; straddle implies y2 != y1), so it
-    is ANSI-safe.
-
-    Trade vs the Arrow broadcast-dict UDF: the fold is evaluated by
-    Spark's interpreted HOF path per candidate row (O(ring vertices)
-    each), while the UDF pays Arrow transfer + numpy vectorized
-    kernel. Small rings (<~100 vertices) favor this form; huge rings
-    favor the dict UDF. Single-ring rows only — multi-part/hole
-    layers stay on the Arrow path."""
-    n = f"size({xs})"
-    y2 = f"(element_at({ys}, i) - {lat})"
-    y1 = f"(element_at({ys}, 1 + i % {n}) - {lat})"
-    x2 = f"(element_at({xs}, i) - {lon})"
-    x1 = f"(element_at({xs}, 1 + i % {n}) - {lon})"
-    straddle = f"(({y1} > 0D AND {y2} <= 0D) OR ({y2} > 0D AND {y1} <= 0D))"
-    inter = f"(({x1} * {y2} - {x2} * {y1}) / ({y2} - {y1}))"
-    toggle = (f"CASE WHEN {straddle} THEN "
-              f"(CASE WHEN {inter} > 0D THEN true ELSE false END) "
-              f"ELSE false END")
-    return F.expr(
-        f"aggregate(sequence(1, {n}), false, "
-        f"(acc, i) -> CASE WHEN {toggle} THEN NOT acc ELSE acc END)"
-    )
-
-
 def _ring_mask(geom_pdf: "pd.DataFrame", xv: "np.ndarray",
                yv: "np.ndarray") -> "np.ndarray":
     """Exact mask for the rings-as-arrays geometry side (single ring
@@ -718,6 +682,187 @@ def _grouped_shuffle_pip(
     )
 
 
+# ------------------------------------------------ band-table exact stage
+
+_KEY_COLS = ["cell", "poly_id", "minx", "miny", "maxx", "maxy"]
+# Engine choice for the broadcast arm. Band rows per cell key is the
+# work each probe row does in the hash join; past this mean the Arrow
+# y-band kernel wins (measured crossover: PLANS.md "band table vs
+# Arrow").
+_BAND_ROWS_PER_CELL = 24.0
+# Edge slots per band row. Each slot adds ~400 bytes of bytecode to the
+# fused join method, and HotSpot does not compile methods over 8,000
+# bytes; tests/test_spatial_join_bands.py pins the join_tile plan under it.
+_BAND_MAX_EDGES = 4
+# Degrees added around each cell: the Spark cell expression and the
+# numpy inverse below round differently. A wider range only adds
+# breakpoints, never drops a point.
+_CELL_MARGIN = 1e-7
+# Ring coordinates at most this large keep every band term finite
+# (products stay < 1e301), so no term is NaN, which Spark orders
+# above every number; other rings take the Arrow kernel.
+_BAND_COORD_LIMIT = 1e150
+
+
+def _collect_cover(cover: DataFrame, res: int, extra: list[str]):
+    """Collect the polygon layer on the driver: ({poly_id: (n, 2)
+    float64 ring}, keys), keys a pandas frame of every cover row's
+    (cell, poly_id, minx..maxy, *extra), duplicate rows kept.
+
+    One job, no shuffle: only the row whose cell holds the ring's
+    first vertex carries the ring, so each ring crosses about once; a
+    polygon with no such row (the vertex rounds into a neighbour cell)
+    costs one filtered job more. The test is one SQL string: built
+    from Columns it costs ~50 py4j calls per join. This is the
+    dimension side of a broadcast join — collecting it is as
+    legitimate as F.broadcast(cover)."""
+    n, lim = 1 << res, (1 << res) - 1
+    x, y = "try_element_at(xs, 1)", "try_element_at(ys, 1)"
+    tx = f"ceil(({x} + 180D) * {n}D / 360D) - 1"
+    ty = f"{lim} - (ceil((ln(tan(radians(45D + {y} / 2D))) / pi() + 1D) * {n / 2}D) - 1)"
+    first = F.expr(f"cell = ({n * n} | shiftleft(least(greatest({tx}, 0), {lim}), {res})"
+                   f" | least(greatest({ty}, 0), {lim}))")
+    pdf = cover.select(*_KEY_COLS, *extra, F.when(first, F.col("xs")).alias("_xs"),
+                       F.when(first, F.col("ys")).alias("_ys")).toPandas()
+    has = pdf["_xs"].notna().to_numpy()
+    rings = dict(zip(pdf["poly_id"][has], zip(pdf["_xs"][has], pdf["_ys"][has])))
+    keys = pdf.drop(columns=["_xs", "_ys"])
+    missing = sorted(set(keys["poly_id"]) - set(rings))
+    if missing:
+        rings.update((r[0], r[1:]) for r in (
+            cover.filter(F.col("poly_id").isin(missing))
+            .select("poly_id", "xs", "ys").dropDuplicates(["poly_id"]).collect()))
+    return {int(p): np.column_stack([np.asarray(xs, dtype=np.float64),
+                                     np.asarray(ys, dtype=np.float64)])
+            for p, (xs, ys) in rings.items()}, keys
+
+
+def _cell_bounds(cell: np.ndarray, res: int):
+    """(lon floor, lat floor, lat ceiling) of each cell id at `res`,
+    widened by _CELL_MARGIN. Grid-border cells are open outward:
+    `tiles.cell` clamps every point beyond the grid into them."""
+    lim = (1 << res) - 1
+    code = np.asarray(cell, dtype=np.int64) - (1 << (2 * res))
+    tx, ty = code >> res, code & lim
+    x0, y0, _, y1 = mercator.tile_bounds(tx, lim - ty, res)
+    lat0, lon0 = mercator.meters_to_lat_lon(x0, y0)
+    lat1, _ = mercator.meters_to_lat_lon(x0, y1)
+    return (np.where(tx <= 0, -np.inf, lon0 - _CELL_MARGIN),
+            np.where(ty >= lim, -np.inf, lat0 - _CELL_MARGIN),
+            np.where(ty <= 0, np.inf, lat1 + _CELL_MARGIN))
+
+
+def _bands_fit(keys: pd.DataFrame, rings: dict, res: int) -> bool:
+    """Engine choice for the broadcast arm, made before any band row
+    is built: True when every ring is finite within _BAND_COORD_LIMIT
+    and the band table would hold at most _BAND_ROWS_PER_CELL rows per
+    cell key. A cover row gets one band per ring vertex y inside its
+    cell's latitude range, plus one — counted with searchsorted."""
+    n = 0
+    lat0, lat1 = _cell_bounds(keys["cell"].to_numpy(), res)[1:]
+    for pid, idx in keys.groupby("poly_id").indices.items():
+        ring = rings[int(pid)]
+        if ring.size and not (np.abs(ring) <= _BAND_COORD_LIMIT).all():
+            return False
+        ys = np.unique(ring[:, 1])
+        n += len(idx) + int(np.maximum(
+            np.searchsorted(ys, lat1[idx]) - np.searchsorted(ys, lat0[idx], "right"),
+            0).sum())
+    return n <= _BAND_ROWS_PER_CELL * max(1, keys["cell"].nunique())
+
+
+def _band_table(keys: pd.DataFrame, rings: dict, res: int):
+    """The exact PIP stage as a table: (pdf, k), or None when a band
+    needs more than _BAND_MAX_EDGES edge slots.
+
+    Each cover row (cell, poly_id) splits into latitude bands
+    [_band_lo, _band_hi) at the ring vertex ys inside the cell's
+    latitude range, clipped to the ring's and the cover row's
+    envelopes. A band keeps the edges that straddle all of it and do
+    not lie entirely left of the cell; bands with no edge are dropped
+    (parity 0). For a point in the band every kept edge passes the
+    straddle test of kernels.pip.point_in_ring and every dropped edge
+    adds no crossing — a left-of-cell edge has both relative x < 0, so
+    its intersection is <= 0 in floating point too, underflow
+    included — so the point-relative crossing terms decide it
+    bit-identically to the kernel. Short bands are padded with the
+    edge (xp, hi) -> (xp, lo), xp just left of every point the row can
+    see: it straddles the band and, being left, never counts.
+    _band_minx/_band_maxx carry the envelope test in longitude."""
+    lon0, lat0, lat1 = _cell_bounds(keys["cell"].to_numpy(), res)
+    minx, miny, maxx, maxy = keys[_KEY_COLS[2:]].to_numpy(dtype=np.float64).T
+    parts, n = [], 0  # per polygon: (cover row, lo, hi, x0, x1, xb, band, slot, edges)
+    for pid, idx in keys.groupby("poly_id").indices.items():
+        ring = closed_ring(rings[int(pid)])
+        if ring is None:
+            continue
+        e = np.column_stack([ring[1:], ring[:-1]])  # x1 y1 x2 y2
+        elo = np.minimum(e[:, 1], e[:, 3])
+        ehi = np.maximum(e[:, 1], e[:, 3])
+        ys = np.unique(ring[:, 1])
+        rmin, rmax = ring.min(axis=0), ring.max(axis=0)
+        # np.maximum/np.minimum propagate NaN, so a NaN envelope drops the row
+        lo = np.maximum(np.maximum(lat0[idx], rmin[1]), miny[idx])
+        hi = np.minimum(np.minimum(lat1[idx], rmax[1]),
+                        np.nextafter(maxy[idx], np.inf))
+        x0 = np.maximum(rmin[0], minx[idx])
+        x1 = np.minimum(rmax[0], maxx[idx])
+        ok = (lo < hi) & (x0 <= x1)
+        idx, lo, hi, x0, x1 = idx[ok], lo[ok], hi[ok], x0[ok], x1[ok]
+        xb = np.maximum(lon0[idx], x0)
+        s = np.searchsorted(ys, lo, "right")  # first vertex y above lo
+        nb = np.searchsorted(ys, hi, "left") - s + 1
+        row = np.repeat(np.arange(len(idx)), nb)
+        j = np.arange(len(row)) - np.repeat(np.cumsum(nb) - nb, nb)
+        y = ys[np.minimum(s[row] + j, len(ys) - 1)]
+        blo = np.where(j == 0, lo[row], ys[np.maximum(s[row] + j - 1, 0)])
+        bhi = np.where(j == nb[row] - 1, hi[row], y)
+        m = ((elo <= blo[:, None]) & (ehi >= bhi[:, None])
+             & (np.maximum(e[:, 0], e[:, 2]) >= xb[row][:, None]))
+        has = m.any(axis=1)
+        band, edge = np.nonzero(m[has])
+        slot = np.arange(len(band)) - np.searchsorted(band, band)
+        row = row[has]
+        parts.append((idx[row], blo[has], bhi[has], x0[row], x1[row],
+                      xb[row], band + n, slot, e[edge]))
+        n += len(row)
+    src, lo, hi, x0, x1, xb, band, slot, edges = (
+        [np.concatenate(c) for c in zip(*parts)] if parts else [np.zeros(0)] * 9)
+    k = int(slot.max()) + 1 if len(slot) else 1
+    if k > _BAND_MAX_EDGES:
+        return None
+    xp = np.nextafter(xb, -np.inf)
+    slots = np.repeat(np.column_stack([xp, hi, xp, lo])[:, None, :], k, axis=1)
+    slots[band.astype(np.int64), slot.astype(np.int64)] = edges.reshape(-1, 4)
+    pdf = (keys.iloc[src.astype(np.int64)].drop(columns=_KEY_COLS[2:])
+           .reset_index(drop=True))
+    for c, v in zip(("_band_lo", "_band_hi", "_band_minx", "_band_maxx"),
+                    (lo, hi, x0, x1)):
+        pdf[c] = v
+    for j in range(k):
+        for q, c in enumerate(("x1", "y1", "x2", "y2")):
+            pdf[f"_b{j}{c}"] = slots[:, j, q]
+    return pdf, k
+
+
+def _band_condition(lon: Column, lat: Column, k: int) -> Column:
+    """The band table's exact test: `_band_lo <= lat < _band_hi`, the
+    longitude envelope, then the XOR of k crossing terms in the
+    point-relative form of kernels.pip.point_in_ring. The band bounds
+    come first: a division is safe only for a point inside the band."""
+    odd = None
+    for j in range(k):
+        x1 = F.col(f"_b{j}x1") - lon
+        y1 = F.col(f"_b{j}y1") - lat
+        x2 = F.col(f"_b{j}x2") - lon
+        y2 = F.col(f"_b{j}y2") - lat
+        cross = (x1 * y2 - x2 * y1) / (y2 - y1) > 0.0
+        odd = cross if odd is None else odd != cross
+    return ((lat >= F.col("_band_lo")) & (lat < F.col("_band_hi"))
+            & (lon >= F.col("_band_minx")) & (lon <= F.col("_band_maxx"))
+            & odd)
+
+
 def spatial_join_points_in_polygons(
     points: DataFrame,
     cover: DataFrame,
@@ -741,64 +886,75 @@ def spatial_join_points_in_polygons(
     whose point lies inside the polygon.
     """
     pts = assign_cell(points, lon, lat, res)
+    keep = keep_point_cols or [c for c in points.columns]
+    keep_poly = keep_poly_cols or ["poly_id"]
 
     if strategy in ("shuffle", "grouped", "grouped_salted"):
         # no-broadcast regime: grouped-shuffle exact stage (ring ships
         # once per (cell, poly_id) group — see _grouped_shuffle_pip).
         # 'grouped_salted' splits hot (cell, poly_id) cogroups across
         # n_salt tasks (all keys, or only those above salt_threshold).
-        keep = keep_point_cols or [c for c in points.columns]
-        keep_poly = keep_poly_cols or ["poly_id"]
         return _grouped_shuffle_pip(
             pts, cover, lon=lon, lat=lat, keep=keep, keep_poly=keep_poly,
             n_salt=n_salt if strategy == "grouped_salted" else 0,
             salt_threshold=salt_threshold,
         )
 
-    if strategy == "jvm":
-        # zero-Python exact stage: the OGR crossing rule as a
-        # higher-order-function fold over the ring arrays carried by
-        # the broadcast join — see pip_hof_condition for when this
-        # beats the Arrow path
-        cov = cover
-        pip_pred = pip_hof_condition(lon, lat, "xs", "ys")
-    elif strategy == "rowrings":
+    if strategy == "rowrings":
         # ablation control ONLY (tools/bench_isolated.py): rings-in-row
         # exact stage — 2*8*V bytes per candidate through Arrow. This
         # is the measured cliff the grouped strategy replaces.
-        cov = cover
+        joined = pts.join(cover, "cell")
         pip_pred = _pip_udf(
             F.col(lon), F.col(lat), F.col("poly_id"), F.col("xs"), F.col("ys")
         )
-    else:
+    elif strategy in ("broadcast", "salted"):
+        extra = [c for c in keep_poly if c not in _KEY_COLS]
+        rings, keys = _collect_cover(cover, res, extra)
+        bands = None
+        if strategy == "broadcast" and _bands_fit(keys, rings, res):
+            bands = _band_table(keys, rings, res)
+        if bands is not None:
+            # band-table form: the exact test is column arithmetic in
+            # the broadcast hash join's codegen stage, no Python
+            pdf, k = bands
+            fields = {f.name: f for f in cover.schema.fields}
+            schema = T.StructType(
+                [fields[c] for c in _KEY_COLS[:2] + extra]
+                + [T.StructField(c, T.DoubleType(), False)
+                   for c in pdf.columns[2 + len(extra):]])
+            table = cover.sparkSession.createDataFrame(pdf, schema)
+            return (pts.join(F.broadcast(table), "cell")
+                    .filter(_band_condition(F.col(lon), F.col(lat), k))
+                    .select(*keep, *keep_poly))
         # broadcast-dict form: candidates carry only poly_id into the
         # Arrow exact stage; rings cross to each executor once
-        rings_bc = _rings_broadcast(cover)
+        rings_bc = cover.sparkSession.sparkContext.broadcast(rings)
         cov = cover.drop("xs", "ys")
         pip_pred = _pip_dict_udf(rings_bc)(
             F.col(lon), F.col(lat), F.col("poly_id")
         )
-
-    if strategy == "salted":
-        hot = hot_cells or []
-        pts = pts.withColumn(
-            "salt",
-            F.when(F.col("cell").isin(hot),
-                   F.pmod(F.xxhash64(lon, lat), F.lit(n_salt)))
-            .otherwise(F.lit(0)),
-        )
-        salted_cov = cov.withColumn(
-            "salt",
-            F.explode(
-                F.when(F.col("cell").isin(hot), F.sequence(F.lit(0), F.lit(n_salt - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        joined = pts.join(F.broadcast(salted_cov), ["cell", "salt"])
-    elif strategy == "rowrings":
-        joined = pts.join(cov, "cell")
+        if strategy == "salted":
+            hot = hot_cells or []
+            pts = pts.withColumn(
+                "salt",
+                F.when(F.col("cell").isin(hot),
+                       F.pmod(F.xxhash64(lon, lat), F.lit(n_salt)))
+                .otherwise(F.lit(0)),
+            )
+            salted_cov = cov.withColumn(
+                "salt",
+                F.explode(
+                    F.when(F.col("cell").isin(hot),
+                           F.sequence(F.lit(0), F.lit(n_salt - 1)))
+                    .otherwise(F.array(F.lit(0)))
+                ),
+            )
+            joined = pts.join(F.broadcast(salted_cov), ["cell", "salt"])
+        else:
+            joined = pts.join(F.broadcast(cov), "cell")
     else:
-        joined = pts.join(F.broadcast(cov), "cell")
+        raise ValueError(f"unknown spatial join strategy: {strategy!r}")
 
     # envelope stage — JVM-side short circuit before any Python runs
     env = (
@@ -806,6 +962,4 @@ def spatial_join_points_in_polygons(
         & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
     )
     exact = joined.filter(env).filter(pip_pred)
-    keep = keep_point_cols or [c for c in points.columns]
-    keep_poly = keep_poly_cols or ["poly_id"]
     return exact.select(*keep, *keep_poly)

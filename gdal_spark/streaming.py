@@ -127,9 +127,9 @@ def stream_spatial_join(stream_df: DataFrame, cover: DataFrame, *,
     """Stream-static spatial join: the batch cell-bucketed PIP join
     (operators.spatial_join, broadcast strategy) composed unchanged
     onto a streaming DataFrame. Every stage is stateless — cell
-    assignment is codegen column math, the polygon cover is a static
-    broadcast (rings cross to each executor once via the broadcast
-    dict), and the exact-PIP Arrow UDF is per-row — so the same plan
+    assignment is codegen column math, the polygon side is a static
+    broadcast (the band table, or the ring dict on dense covers), and
+    the exact PIP test is per-row — so the same plan
     that runs the batch flagship runs continuously with exactly-once
     sink semantics from the checkpoint. The one structural difference
     vs batch: the static side is collected ONCE at query start and

@@ -154,22 +154,20 @@ def test_wkb_grouped_shuffle_matches_broadcast_dict(spark):
     assert len(got["broadcast"]) > 100
 
 
-def test_jvm_hof_strategy_matches_arrow_paths(spark):
-    from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
-    from gdal_spark.sources import docs as D
-    from gdal_spark.sources import polygons
-
-    pts = D.synth_docs(spark, 20000).select("doc_id", "doc_index", "lon", "lat")
+def test_broadcast_band_engine_matches_shuffle_python_free(spark):
+    """The default broadcast arm runs the band-table exact stage on the
+    countries64 cover: same pairs as the grouped arm, and no Python in
+    the plan."""
+    pts = docs.synth_docs(spark, 20000).select("doc_id", "doc_index", "lon", "lat")
     cov = polygons.countries64_cover(spark, res=5)
     got = {}
-    for st in ("broadcast", "shuffle", "jvm"):
-        got[st] = set(map(tuple, spatial_join_points_in_polygons(
+    for st in ("broadcast", "shuffle"):
+        got[st] = sorted(map(tuple, spatial_join_points_in_polygons(
             pts, cov, res=5, strategy=st, keep_point_cols=["doc_index"])
             .select("doc_index", "poly_id").collect()))
-    assert got["jvm"] == got["broadcast"] == got["shuffle"]
-    assert len(got["jvm"]) > 0
-    # and the jvm plan is entirely Python-free
+    assert got["broadcast"] == got["shuffle"]
+    assert len(got["broadcast"]) > 0
     plan = spatial_join_points_in_polygons(
-        pts, cov, res=5, strategy="jvm", keep_point_cols=["doc_index"]
+        pts, cov, res=5, keep_point_cols=["doc_index"]
     )._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Arrow" not in plan

@@ -9,9 +9,9 @@ registry query, so the isolated harness treats both uniformly.
 Entries:
   headline_join_tile         the north-star workload (spatial join +
                              tile assignment over the synthesized
-                             interleaved-doc table), pure-JVM HOF
-                             exact stage — same plan bench.py times
-  headline_join_tile_arrow   broadcast-dict Arrow exact-stage twin
+                             interleaved-doc table), default strategy
+                             (band-table exact stage) — same plan
+                             bench.py times
   spatial_join_bigpoly_skew_grouped  4096-vertex cover with polygon 0
                              inflated to hold the dominant candidate
                              share, UNSALTED grouped cogroup (the hot
@@ -40,25 +40,23 @@ def _doc_path(spark, n_docs: int) -> str:
     return p
 
 
-def _headline(strategy: str):
-    def run(spark, sf_dir):
-        from gdal_spark.operators import tiling
-        from gdal_spark.operators.spatial_join import (
-            spatial_join_points_in_polygons,
-        )
-        from gdal_spark.sources import polygons
+def _headline(spark, sf_dir):
+    from gdal_spark.operators import tiling
+    from gdal_spark.operators.spatial_join import (
+        spatial_join_points_in_polygons,
+    )
+    from gdal_spark.sources import polygons
 
-        n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
-        d = spark.read.parquet(_doc_path(spark, n_docs))
-        cov = polygons.countries64_cover(spark, res=6)
-        joined = spatial_join_points_in_polygons(
-            d, cov, res=6, strategy=strategy,
-            keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
-        )
-        tiled = tiling.assign_tiles(joined, zoom=12)
-        return tiled.select(
-            "doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
-    return run
+    n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
+    d = spark.read.parquet(_doc_path(spark, n_docs))
+    cov = polygons.countries64_cover(spark, res=6)
+    joined = spatial_join_points_in_polygons(
+        d, cov, res=6,
+        keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
+    )
+    tiled = tiling.assign_tiles(joined, zoom=12)
+    return tiled.select(
+        "doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
 
 
 def _bigpoly(strategy: str, skew: bool, **kw):
@@ -111,8 +109,7 @@ def _rpc_dem(variant: str):
 
 
 EXTRA = {
-    "headline_join_tile": _headline("jvm"),
-    "headline_join_tile_arrow": _headline("broadcast"),
+    "headline_join_tile": _headline,
     "spatial_join_bigpoly_grouped": _bigpoly("shuffle", skew=False),
     "spatial_join_bigpoly_skew_grouped": _bigpoly("shuffle", skew=True),
     "spatial_join_bigpoly_skew_salted": _bigpoly(

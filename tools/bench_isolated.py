@@ -17,10 +17,10 @@ import os
 import subprocess
 import sys
 
-DEFAULT = ["headline_join_tile", "headline_join_tile_arrow",
-           "tile_assign_suite", "pyramid_counts", "spatial_join",
-           "spatial_join_wkb", "spatial_join_bigring", "rasterize_suite",
-           "overview_suite", "similarity_topk", "knn", "minhash_lsh",
+DEFAULT = ["headline_join_tile", "tile_assign_suite", "pyramid_counts",
+           "spatial_join", "spatial_join_wkb", "spatial_join_bigring",
+           "rasterize_suite", "overview_suite", "similarity_topk", "knn",
+           "minhash_lsh",
            "spatial_join_bigpoly_grouped",
            "spatial_join_bigpoly_skew_grouped",
            "spatial_join_bigpoly_skew_salted",

@@ -110,8 +110,9 @@ Median engine efficiency relative to the machine's own ceiling:
 
 Why the plan scales: tile/cell assignment is whole-stage-codegen
 column math (no shuffle); the polygon cover broadcasts; the exact-PIP
-stage is an Arrow-batched pandas UDF on pre-filtered candidates; the
-only wide operation is the final reduce. On a real 4N-executor cluster
+stage is column arithmetic inside the broadcast join (an Arrow-batched
+pandas UDF on dense covers); the only wide operation is the final
+reduce. On a real 4N-executor cluster
 the same plan adds only O(log n_executors) broadcast fan-out.
 """
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
