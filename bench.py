@@ -190,11 +190,7 @@ def main() -> None:
         # ring-transfer amplification). 'broadcast' rides the
         # broadcast-dict PIP (8 bytes/candidate into Arrow);
         # 'shuffle' (r4) is the grouped cogroup form — rings ship once
-        # per (cell, poly_id) group, the no-broadcast scale path. The
-        # old rings-in-row cliff ('rowrings', 64 KiB/candidate) is an
-        # opt-in ablation (SPARK_GRAFT_BENCH_ABLATION=1 or
-        # tools/bench_isolated.py) so the suite wall time tracks engine
-        # quality, not the deliberately-bad control (VERDICT r3 item 8).
+        # per (cell, poly_id) group, the no-broadcast scale path.
         def run(s, d):
             dense = polygons.countries64_dense_cover(s, res=6, nv=4096)
             # repartition: a bare limit() collapses the no-shuffle
@@ -247,7 +243,6 @@ def main() -> None:
     }
     if os.environ.get("SPARK_GRAFT_BENCH_ABLATION"):
         # deliberately-bad / noisy arms, excluded from the tracked wall
-        per_query["spatial_join_bigpoly_rowrings"] = bench_bigpoly("rowrings")
         per_query["viewshed_1k"] = bench_viewshed(1024)
     for name, fn in per_query.items():
         t = time.time()

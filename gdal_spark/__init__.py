@@ -9,8 +9,8 @@ capabilities of the reference geospatial engine (GDAL, studied at
   gdal2tiles.py:414-530),
 - point-in-polygon ray casting vectorized over Arrow batches
   (reference: ogr/ogrlinearring.cpp:462-531),
-- cell-bucketed spatial joins with broadcast / salted-shuffle
-  strategies and AQE skew handling,
+- cell-bucketed spatial joins, broadcast or grouped-shuffle, with the
+  small-ring exact test fused into the join as column arithmetic,
 - kNN via iterative cell k-ring expansion (semantics of
   alg/gdalgrid.cpp:896-909 grow-the-radius search),
 - tile-pyramid reduction (gdal2tiles.py:1471 overview build),

@@ -34,6 +34,19 @@ def merc_my(lat: Column) -> Column:
     ) * F.lit(ORIGIN_SHIFT) / F.lit(180.0)
 
 
+def _floor_coord(c: Column, origin: float, tile_deg: float) -> Column:
+    """`c` raised to at least `origin - 2^53 * tile_deg`, 2^53 tiles
+    below the grid's edge. ceil() of a double is a long that saturates
+    at -2^63 for -inf or -1e300, and the "- 1" of the ceil-1 rule then
+    overflows (ARITHMETIC_OVERFLOW under ANSI), failing the whole job.
+    Only tile ids below -2^52 move; NaN and null pass through.
+    Flooring the input column, not the tile-unit value, costs the
+    fused join stage one compare instead of a second copy of the tile
+    math."""
+    lo = origin - float(2**53) * tile_deg
+    return F.when(c < F.lit(lo), F.lit(lo)).otherwise(c)
+
+
 def _tile_from_meters(m: Column, zoom: int, tile_size: int = TILE_SIZE) -> Column:
     """MetersToPixels + PixelsToTile ceil-1 rule (gdal2tiles.py:452-465)."""
     res = F.lit(2.0 * ORIGIN_SHIFT / tile_size / float(2**zoom))
@@ -41,7 +54,11 @@ def _tile_from_meters(m: Column, zoom: int, tile_size: int = TILE_SIZE) -> Colum
 
 
 def tms_tile(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
-    """(tx, ty_tms) at fixed zoom."""
+    """(tx, ty_tms) at fixed zoom. merc_my needs no floor: for a double
+    lat it is finite, NaN, or null (log of a tan <= 0), never -inf — a
+    double argument keeps tan(.) at least ~1e-19 away from 0 unless it
+    is 0."""
+    lon = _floor_coord(lon, -180.0, 360.0 / 2**zoom)
     return _tile_from_meters(merc_mx(lon), zoom), _tile_from_meters(merc_my(lat), zoom)
 
 
@@ -78,8 +95,9 @@ def geodetic_tile(lon: Column, lat: Column, zoom: int,
     mercator. Returns (tx, ty_tms) — unclamped, TMS orientation."""
     res_fact = 180.0 / tile_size if tms_compatible else 360.0 / tile_size
     res = F.lit(res_fact / float(2**zoom))
-    px = (F.lit(180.0) + lon) / res
-    py = (F.lit(90.0) + lat) / res
+    tile_deg = res_fact * tile_size / 2**zoom
+    px = (F.lit(180.0) + _floor_coord(lon, -180.0, tile_deg)) / res
+    py = (F.lit(90.0) + _floor_coord(lat, -90.0, tile_deg)) / res
     tx = (F.ceil(px / F.lit(float(tile_size))) - 1).cast("bigint")
     ty = (F.ceil(py / F.lit(float(tile_size))) - 1).cast("bigint")
     return tx, ty

@@ -11,14 +11,14 @@ spatial filter + layer-algebra joins):
       → exact ray-cast PIP  (the crossing rule of
         ogrlinearring.cpp:503-531, bit-identical to kernels.pip)
 
-Join strategy:
-- 'broadcast' (default when the cover table is small): the polygon
-  side is broadcast; NO shuffle of the point side at all — at 10^12
-  rows this is the only acceptable default.
-- 'shuffle' (= 'grouped'): no broadcast; see "Ring transfer" below.
-  'grouped_salted' splits hot (cell, poly_id) cogroups across tasks.
-- 'salted': point side gets salt = hash(lon, lat) % n_salt, hot cover
-  cells are replicated n_salt times (FIXTURES F3 skew case).
+Join strategy, one of two (any other string raises ValueError):
+- 'broadcast' (default): the polygon side is broadcast; NO shuffle of
+  the point side at all — at 10^12 rows this is the only acceptable
+  default.
+- 'shuffle': no broadcast, for covers too big to collect; see "Ring
+  transfer" below. No salting: on every fixture measured (PLANS.md
+  "(cell, poly_id) key sizes") the largest cogroup key holds 0.2% of
+  the candidates, so no key is hot.
 
 Exact-stage engine of the 'broadcast' strategy, picked from the cover
 itself (_bands_fit, _band_table):
@@ -37,20 +37,17 @@ itself (_bands_fit, _band_table):
   coordinate is not finite within 1e150. Measured crossover in
   PLANS.md "band table vs Arrow".
 
-Ring transfer: on the Arrow engine (and 'salted') the polygon
-coordinate arrays are NOT join columns — each candidate row carries
-only poly_id through Arrow, and the exact-stage UDF resolves rings
-from a sparkContext.broadcast({poly_id: ring ndarray}) dict that
-crosses to each executor ONCE: 8 bytes/row regardless of polygon
-complexity. When the cover is too big to broadcast at all (10^8
-polygons — exactly the regime where a driver dict is impossible),
-the 'grouped' strategy ships each ring ONCE PER (cell, poly_id)
-GROUP via a cogrouped applyInPandas: candidates shuffle at 24 B +
-keep-cols per row, rings ride the cogroup's other side one copy per
-group, and the exact stage zips them executor-side. The old
-rings-in-row form ('rowrings') is kept only as the measured ablation
-control (tools/bench_isolated.py): 64 KiB/candidate at 4096
-vertices, 6-30x slower — the cliff the grouped form removes.
+Ring transfer: on the Arrow engine the polygon coordinate arrays are
+NOT join columns — each candidate row carries only poly_id through
+Arrow, and the exact-stage UDF resolves rings from a
+sparkContext.broadcast({poly_id: ring ndarray}) dict that crosses to
+each executor ONCE: 8 bytes/row regardless of polygon complexity.
+When the cover is too big to broadcast at all (10^8 polygons —
+exactly the regime where a driver dict is impossible), the 'shuffle'
+strategy ships each ring ONCE PER (cell, poly_id) GROUP via a
+cogrouped applyInPandas: candidates shuffle at 24 B + keep-cols per
+row, rings ride the cogroup's other side one copy per group, and the
+exact stage zips them executor-side.
 
 The 3-stage short-circuit order (bbox reject → envelope accept → exact)
 is preserved: the envelope compare happens before the exact test, and
@@ -71,34 +68,11 @@ from ..kernels import mercator
 from ..kernels.pip import closed_ring, point_in_ring
 
 
-@F.pandas_udf(T.BooleanType())
-def _pip_udf(x: pd.Series, y: pd.Series, poly_id: pd.Series,
-             xs: pd.Series, ys: pd.Series) -> pd.Series:
-    """Exact stage, rings-in-row form (shuffle strategy only): group the
-    Arrow batch by polygon, run the vectorized ray-cast once per polygon
-    (numpy broadcast over that group's points)."""
-    out = np.zeros(len(x), dtype=bool)
-    if len(x) == 0:
-        return pd.Series(out)
-    xv = x.to_numpy(dtype=np.float64)
-    yv = y.to_numpy(dtype=np.float64)
-    pid = poly_id.to_numpy()
-    for p in pd.unique(pid):
-        idx = np.nonzero(pid == p)[0]
-        first = idx[0]
-        ring = np.column_stack([
-            np.asarray(xs.iloc[first], dtype=np.float64),
-            np.asarray(ys.iloc[first], dtype=np.float64),
-        ])
-        out[idx] = point_in_ring(xv[idx], yv[idx], ring)
-    return pd.Series(out)
-
-
 def _pip_dict_udf(rings_bc):
     """Exact stage, broadcast-dict form: the UDF receives only
     (x, y, poly_id) — 24 bytes/row through Arrow — and resolves ring
     geometry from the executor-local broadcast (ogrlinearring.cpp
-    crossing rule, identical math to _pip_udf)."""
+    crossing rule)."""
 
     @F.pandas_udf(T.BooleanType())
     def pip(x: pd.Series, y: pd.Series, poly_id: pd.Series) -> pd.Series:
@@ -120,6 +94,20 @@ def _pip_dict_udf(rings_bc):
 def assign_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
                 res: int = 6, out: str = "cell") -> DataFrame:
     return df.withColumn(out, tile_fns.cell(F.col(lon), F.col(lat), res))
+
+
+def _check_strategy(strategy: str) -> None:
+    if strategy not in ("broadcast", "shuffle"):
+        raise ValueError(
+            f"unknown spatial join strategy {strategy!r}: "
+            f"use 'broadcast' or 'shuffle'")
+
+
+def _envelope(lon: str, lat: str) -> Column:
+    """Envelope prefilter on a joined cover row (the bbox stage of
+    FilterGeometry), edges inclusive."""
+    return ((F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
+            & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy")))
 
 
 @F.pandas_udf(T.StructType([
@@ -147,33 +135,6 @@ def decode_point_cols(df: DataFrame, geom: str = "geom") -> DataFrame:
     return out.withColumn("lon", F.col("_ll.lon")).withColumn(
         "lat", F.col("_ll.lat")
     ).drop("_ll")
-
-
-@F.pandas_udf(T.BooleanType())
-def _pip_wkb_udf(x: pd.Series, y: pd.Series, poly_id: pd.Series,
-                 wkb_col: pd.Series) -> pd.Series:
-    """Exact PIP against WKB MultiPolygons, rings-in-row form (shuffle
-    strategy only): decode each distinct polygon ONCE per Arrow batch,
-    then run the vectorized crossing rule per part (outer ring minus
-    holes, OR across parts — OGRPolygon/OGRMultiPolygon containment
-    semantics)."""
-    from ..kernels import wkb as wkb_mod
-    from ..kernels.pip import point_in_polygon
-
-    out = np.zeros(len(x), dtype=bool)
-    if len(x) == 0:
-        return pd.Series(out)
-    xv = x.to_numpy(dtype=np.float64)
-    yv = y.to_numpy(dtype=np.float64)
-    pid = poly_id.to_numpy()
-    for p in pd.unique(pid):
-        idx = np.nonzero(pid == p)[0]
-        polys = wkb_mod.decode_multipolygon(wkb_col.iloc[idx[0]])
-        hit = np.zeros(idx.shape[0], dtype=bool)
-        for rings in polys:
-            hit |= point_in_polygon(xv[idx], yv[idx], rings)
-        out[idx] = hit
-    return pd.Series(out)
 
 
 def _wkb_polys_broadcast(cover: DataFrame, wkb_col: str = "wkb"):
@@ -233,37 +194,24 @@ def spatial_join_wkb(
     exact multi-ring crossing rule in one Arrow UDF. Supports polygons
     with holes and multi-part polygons (the shapes real country layers
     have, ogr/ogr_core.h:405-443 wkbMultiPolygon)."""
-    pts = decode_point_cols(points, geom)
-    pts = assign_cell(pts, "lon", "lat", res)
-    if strategy in ("shuffle", "grouped"):
+    _check_strategy(strategy)
+    pts = assign_cell(decode_point_cols(points, geom), "lon", "lat", res)
+    keep = keep_point_cols or [c for c in points.columns if c != geom]
+    if strategy == "shuffle":
         # no-broadcast regime: WKB ships once per (cell, poly_id)
         # cogroup, decoded once per group executor-side — the shared
         # grouped plan with the multipolygon mask plugged in
-        keep = keep_point_cols or [c for c in points.columns if c != geom]
         return _grouped_shuffle_pip(
             pts, cover, lon="lon", lat="lat", keep=keep,
             keep_poly=["poly_id"], geom_cols=("wkb",), mask_fn=_wkb_mask,
         )
-    if strategy == "rowrings":
-        joined = pts.join(cover, "cell")
-        pip_pred = _pip_wkb_udf(
-            F.col("lon"), F.col("lat"), F.col("poly_id"), F.col("wkb")
-        )
-    else:
-        # broadcast-dict form: WKB decoded once on the driver, rings
-        # cross to each executor once; candidates carry only poly_id
-        polys_bc = _wkb_polys_broadcast(cover, "wkb")
-        joined = pts.join(F.broadcast(cover.drop("wkb")), "cell")
-        pip_pred = _pip_wkb_dict_udf(polys_bc)(
-            F.col("lon"), F.col("lat"), F.col("poly_id")
-        )
-    env = (
-        (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
-        & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
-    )
-    exact = joined.filter(env).filter(pip_pred)
-    keep = keep_point_cols or [c for c in points.columns if c != geom]
-    return exact.select(*keep, "poly_id")
+    # broadcast-dict form: WKB decoded once on the driver, rings cross
+    # to each executor once; candidates carry only poly_id
+    pip_pred = _pip_wkb_dict_udf(_wkb_polys_broadcast(cover, "wkb"))(
+        F.col("lon"), F.col("lat"), F.col("poly_id"))
+    return (pts.join(F.broadcast(cover.drop("wkb")), "cell")
+            .filter(_envelope("lon", "lat")).filter(pip_pred)
+            .select(*keep, "poly_id"))
 
 
 def _convex_clip(sub_x, sub_y, clip_x, clip_y):
@@ -556,23 +504,10 @@ def _grouped_shuffle_pip(
     keep_poly: list[str],
     geom_cols: tuple[str, ...] = ("xs", "ys"),
     mask_fn=_ring_mask,
-    n_salt: int = 0,
-    salt_threshold: int | None = None,
 ) -> DataFrame:
     """Exact PIP stage for the no-broadcast regime: ship each polygon's
     geometry ONCE PER (cell, poly_id) GROUP instead of once per
     candidate row.
-
-    Salt arm (n_salt > 1): a hot (cell, poly_id) key — one big polygon
-    capturing most candidates in a dense cell — would otherwise pin one
-    cogroup task. Candidates get `_salt = hash(lon, lat) % n_salt` and
-    the geometry row is REPLICATED once per salt on the cogroup's other
-    side, splitting the group across n_salt tasks at the cost of
-    n_salt-1 extra geometry copies per salted key. With
-    `salt_threshold` set, one cheap count-aggregation finds the keys
-    with more than `salt_threshold` candidates and only THOSE are
-    salted (geometry volume for cold keys unchanged); without it every
-    key salts — the forced-on mode the correctness gate uses.
 
     Plan: cell equi-join against the geometry-free cover (cell,
     poly_id, envelope) -> JVM envelope short-circuit -> cogroup
@@ -584,31 +519,23 @@ def _grouped_shuffle_pip(
     Shuffle volume: candidates at 24 B + keep-cols each (the same
     24 B/row the broadcast-dict arm ships through Arrow), plus ONE
     geometry copy per (cell, poly_id) — vs 2*8*V bytes PER CANDIDATE
-    in the rings-in-row form. At 10^8 polygons (broadcast impossible)
+    if rings rode in each row. At 10^8 polygons (broadcast impossible)
     this is the path that runs; group size is bounded by cell
-    granularity, so AQE-visible and salt-able like any equi-join."""
+    granularity."""
     bad = set(keep_poly) & set(geom_cols)
     if bad:
         raise ValueError(
-            f"grouped 'shuffle' strategy cannot carry geometry columns "
+            f"the 'shuffle' strategy cannot carry geometry columns "
             f"{sorted(bad)} onto output rows — that is exactly the "
             f"per-candidate geometry amplification this path removes; "
-            f"use strategy='rowrings' (ablation only) if you truly need it")
-    cov_cols = ["cell", "poly_id", "minx", "miny", "maxx", "maxy"] + [
-        c for c in keep_poly
-        if c not in ("cell", "poly_id", "minx", "miny", "maxx", "maxy")
-        and c not in geom_cols
-    ]
-    cov_lite = cover.select(*dict.fromkeys(cov_cols))
-    env = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
-    )
+            f"join the cover's geometry back on poly_id after the join")
+    cov_lite = cover.select(*dict.fromkeys(_KEY_COLS + [
+        c for c in keep_poly if c not in _KEY_COLS and c not in geom_cols]))
     carry = list(dict.fromkeys(
         keep + [lon, lat] + [c for c in keep_poly if c != "poly_id"]
     ))
     cand = (
-        pts.join(cov_lite, "cell").filter(env)
+        pts.join(cov_lite, "cell").filter(_envelope(lon, lat))
         .select(*carry, F.col("cell"), F.col("poly_id"))
     )
     # fresh names on the geometry side: cand's poly_id descends from
@@ -617,45 +544,6 @@ def _grouped_shuffle_pip(
         F.col("cell").alias("r_cell"), F.col("poly_id").alias("r_poly_id"),
         *geom_cols,
     )
-
-    cand_keys = ["cell", "poly_id"]
-    geom_keys = ["r_cell", "r_poly_id"]
-    if n_salt > 1:
-        if salt_threshold is not None:
-            # one count-agg over the (already envelope-filtered)
-            # candidates; the hot set is tiny by definition, so the
-            # driver-side collect is bounded and the isin compiles to a
-            # literal JVM set on both cogroup inputs
-            hot = [
-                int(r[0]) for r in (
-                    cand.groupBy("cell", "poly_id").count()
-                    .filter(F.col("count") > int(salt_threshold))
-                    .select(F.xxhash64("cell", "poly_id")).collect()
-                )
-            ]
-            cand_hot = (F.xxhash64("cell", "poly_id").isin(hot)
-                        if hot else F.lit(False))
-            geom_hot = (F.xxhash64("r_cell", "r_poly_id").isin(hot)
-                        if hot else F.lit(False))
-        else:
-            cand_hot = geom_hot = F.lit(True)
-        cand = cand.withColumn(
-            "_salt",
-            F.when(cand_hot,
-                   F.pmod(F.xxhash64(lon, lat), F.lit(n_salt)).cast("int"))
-            .otherwise(F.lit(0)),
-        )
-        geoms = geoms.withColumn(
-            "_salt",
-            F.explode(
-                F.when(geom_hot,
-                       F.sequence(F.lit(0), F.lit(int(n_salt) - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        cand_keys = cand_keys + ["_salt"]
-        geom_keys = geom_keys + ["_salt"]
-
     out_cols = list(dict.fromkeys(keep + keep_poly))
     cand_schema = {f.name: f for f in cand.schema.fields}
     missing = [c for c in out_cols if c not in cand_schema]
@@ -676,8 +564,8 @@ def _grouped_shuffle_pip(
         return cand_pdf.loc[mask, out_cols]
 
     return (
-        cand.groupBy(*cand_keys)
-        .cogroup(geoms.groupBy(*geom_keys))
+        cand.groupBy("cell", "poly_id")
+        .cogroup(geoms.groupBy("r_cell", "r_poly_id"))
         .applyInPandas(exact, out_schema)
     )
 
@@ -715,10 +603,12 @@ def _collect_cover(cover: DataFrame, res: int, extra: list[str]):
     costs one filtered job more. The test is one SQL string: built
     from Columns it costs ~50 py4j calls per join. This is the
     dimension side of a broadcast join — collecting it is as
-    legitimate as F.broadcast(cover)."""
+    legitimate as F.broadcast(cover). x = -inf would overflow the long
+    in ceil(...) - 1; greatest() floors it, and every x it changes,
+    null included, clamps to column 0 either way."""
     n, lim = 1 << res, (1 << res) - 1
     x, y = "try_element_at(xs, 1)", "try_element_at(ys, 1)"
-    tx = f"ceil(({x} + 180D) * {n}D / 360D) - 1"
+    tx = f"ceil(greatest(({x} + 180D) * {n}D / 360D, -1D)) - 1"
     ty = f"{lim} - (ceil((ln(tan(radians(45D + {y} / 2D))) / pi() + 1D) * {n / 2}D) - 1)"
     first = F.expr(f"cell = ({n * n} | shiftleft(least(greatest({tx}, 0), {lim}), {res})"
                    f" | least(greatest({ty}, 0), {lim}))")
@@ -871,11 +761,8 @@ def spatial_join_points_in_polygons(
     lon: str = "lon",
     lat: str = "lat",
     strategy: str = "broadcast",
-    n_salt: int = 8,
-    hot_cells: list[int] | None = None,
     keep_point_cols: list[str] | None = None,
     keep_poly_cols: list[str] | None = None,
-    salt_threshold: int | None = None,
 ) -> DataFrame:
     """points ⋈ polygons with PIP predicate.
 
@@ -885,81 +772,38 @@ def spatial_join_points_in_polygons(
     Returns the point columns + poly_id for every (point, polygon) pair
     whose point lies inside the polygon.
     """
+    _check_strategy(strategy)
     pts = assign_cell(points, lon, lat, res)
     keep = keep_point_cols or [c for c in points.columns]
     keep_poly = keep_poly_cols or ["poly_id"]
 
-    if strategy in ("shuffle", "grouped", "grouped_salted"):
+    if strategy == "shuffle":
         # no-broadcast regime: grouped-shuffle exact stage (ring ships
-        # once per (cell, poly_id) group — see _grouped_shuffle_pip).
-        # 'grouped_salted' splits hot (cell, poly_id) cogroups across
-        # n_salt tasks (all keys, or only those above salt_threshold).
+        # once per (cell, poly_id) group — see _grouped_shuffle_pip)
         return _grouped_shuffle_pip(
-            pts, cover, lon=lon, lat=lat, keep=keep, keep_poly=keep_poly,
-            n_salt=n_salt if strategy == "grouped_salted" else 0,
-            salt_threshold=salt_threshold,
-        )
+            pts, cover, lon=lon, lat=lat, keep=keep, keep_poly=keep_poly)
 
-    if strategy == "rowrings":
-        # ablation control ONLY (tools/bench_isolated.py): rings-in-row
-        # exact stage — 2*8*V bytes per candidate through Arrow. This
-        # is the measured cliff the grouped strategy replaces.
-        joined = pts.join(cover, "cell")
-        pip_pred = _pip_udf(
-            F.col(lon), F.col(lat), F.col("poly_id"), F.col("xs"), F.col("ys")
-        )
-    elif strategy in ("broadcast", "salted"):
-        extra = [c for c in keep_poly if c not in _KEY_COLS]
-        rings, keys = _collect_cover(cover, res, extra)
-        bands = None
-        if strategy == "broadcast" and _bands_fit(keys, rings, res):
-            bands = _band_table(keys, rings, res)
-        if bands is not None:
-            # band-table form: the exact test is column arithmetic in
-            # the broadcast hash join's codegen stage, no Python
-            pdf, k = bands
-            fields = {f.name: f for f in cover.schema.fields}
-            schema = T.StructType(
-                [fields[c] for c in _KEY_COLS[:2] + extra]
-                + [T.StructField(c, T.DoubleType(), False)
-                   for c in pdf.columns[2 + len(extra):]])
-            table = cover.sparkSession.createDataFrame(pdf, schema)
-            return (pts.join(F.broadcast(table), "cell")
-                    .filter(_band_condition(F.col(lon), F.col(lat), k))
-                    .select(*keep, *keep_poly))
-        # broadcast-dict form: candidates carry only poly_id into the
-        # Arrow exact stage; rings cross to each executor once
-        rings_bc = cover.sparkSession.sparkContext.broadcast(rings)
-        cov = cover.drop("xs", "ys")
-        pip_pred = _pip_dict_udf(rings_bc)(
-            F.col(lon), F.col(lat), F.col("poly_id")
-        )
-        if strategy == "salted":
-            hot = hot_cells or []
-            pts = pts.withColumn(
-                "salt",
-                F.when(F.col("cell").isin(hot),
-                       F.pmod(F.xxhash64(lon, lat), F.lit(n_salt)))
-                .otherwise(F.lit(0)),
-            )
-            salted_cov = cov.withColumn(
-                "salt",
-                F.explode(
-                    F.when(F.col("cell").isin(hot),
-                           F.sequence(F.lit(0), F.lit(n_salt - 1)))
-                    .otherwise(F.array(F.lit(0)))
-                ),
-            )
-            joined = pts.join(F.broadcast(salted_cov), ["cell", "salt"])
-        else:
-            joined = pts.join(F.broadcast(cov), "cell")
-    else:
-        raise ValueError(f"unknown spatial join strategy: {strategy!r}")
-
-    # envelope stage — JVM-side short circuit before any Python runs
-    env = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
-    )
-    exact = joined.filter(env).filter(pip_pred)
-    return exact.select(*keep, *keep_poly)
+    extra = [c for c in keep_poly if c not in _KEY_COLS]
+    rings, keys = _collect_cover(cover, res, extra)
+    bands = _band_table(keys, rings, res) if _bands_fit(keys, rings, res) else None
+    if bands is not None:
+        # band-table form: the exact test is column arithmetic in the
+        # broadcast hash join's codegen stage, no Python
+        pdf, k = bands
+        fields = {f.name: f for f in cover.schema.fields}
+        schema = T.StructType(
+            [fields[c] for c in _KEY_COLS[:2] + extra]
+            + [T.StructField(c, T.DoubleType(), False)
+               for c in pdf.columns[2 + len(extra):]])
+        table = cover.sparkSession.createDataFrame(pdf, schema)
+        return (pts.join(F.broadcast(table), "cell")
+                .filter(_band_condition(F.col(lon), F.col(lat), k))
+                .select(*keep, *keep_poly))
+    # broadcast-dict form: candidates carry only poly_id into the Arrow
+    # exact stage (after the JVM envelope short circuit); rings cross
+    # to each executor once
+    rings_bc = cover.sparkSession.sparkContext.broadcast(rings)
+    pip_pred = _pip_dict_udf(rings_bc)(F.col(lon), F.col(lat), F.col("poly_id"))
+    return (pts.join(F.broadcast(cover.drop("xs", "ys")), "cell")
+            .filter(_envelope(lon, lat)).filter(pip_pred)
+            .select(*keep, *keep_poly))

@@ -431,18 +431,14 @@ def sql_spatial_join_wkb() -> str:
 
 
 def q_spatial_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join with the hot-polygon fixture + salted shuffle strategy
-    (north_rule skew handling)."""
-    from .kernels import cells
-
+    """Same join with the hot-polygon fixture (polygon 0 inflated over
+    ~30% of the world, FIXTURES F3) through the no-broadcast grouped
+    cogroup: the inflated polygon spreads over many (cell, poly_id)
+    keys, none of them hot."""
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_cover(spark, res=6, skew_poly0=True)
-    pdf = polygons.countries64_pdf(skew_poly0=True)
-    ring = np.column_stack([np.asarray(pdf.iloc[0]["xs"]), np.asarray(pdf.iloc[0]["ys"])])
-    hot = [int(c) for c in cells.polygon_cover(ring, 6)]
     return spatial_join_points_in_polygons(
-        pts, cov, res=6, strategy="salted", hot_cells=hot, n_salt=8,
-        keep_point_cols=["id"],
+        pts, cov, res=6, strategy="shuffle", keep_point_cols=["id"],
     )
 
 
@@ -456,27 +452,21 @@ BIGRING_NV = 4096
 def q_spatial_join_bigring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship scale fixture, correctness-gated (VERDICT r3 item
     2): the 4096-vertex dense cover (real-country ring sizes) joined
-    through BOTH exact-stage engines — the broadcast-dict Arrow PIP
-    (rings cross once per executor, 8 B/candidate) and the grouped
-    cogroup PIP (no-broadcast regime: rings ship once per
-    (cell, poly_id) group) — plus (r5) the SALTED grouped form with
-    salting forced on for every key (n_salt=4), which replicates each
-    4096-vertex ring per salt and splits each cogroup four ways. One
-    oracle replays the crossing rule (ogrlinearring.cpp:503-531) over
-    all 4096 edges; all three engine tags must produce the identical
+    through BOTH distributions — the broadcast-dict Arrow PIP (rings
+    cross once per executor, 8 B/candidate) and the grouped cogroup PIP
+    (no-broadcast regime: rings ship once per (cell, poly_id) group).
+    One oracle replays the crossing rule (ogrlinearring.cpp:503-531)
+    over all 4096 edges; both engine tags must produce the identical
     row set."""
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_dense_cover(spark, res=6, nv=BIGRING_NV)
-    out = []
-    for tag, st in (("dict", "broadcast"), ("grouped", "shuffle"),
-                    ("salted", "grouped_salted")):
-        out.append(
-            spatial_join_points_in_polygons(
-                pts, cov, res=6, strategy=st, n_salt=4,
-                keep_point_cols=["id"],
-            ).select("id", "poly_id", F.lit(tag).alias("engine"))
-        )
-    return out[0].unionByName(out[1]).unionByName(out[2])
+    joins = [
+        spatial_join_points_in_polygons(
+            pts, cov, res=6, strategy=st, keep_point_cols=["id"],
+        ).select("id", "poly_id", F.lit(tag).alias("engine"))
+        for tag, st in (("dict", "broadcast"), ("grouped", "shuffle"))
+    ]
+    return joins[0].unionByName(joins[1])
 
 
 def sql_spatial_join_bigring() -> str:
@@ -489,8 +479,6 @@ WITH hits AS ({inner})
 SELECT id, poly_id, 'dict' AS engine FROM hits
 UNION ALL
 SELECT id, poly_id, 'grouped' AS engine FROM hits
-UNION ALL
-SELECT id, poly_id, 'salted' AS engine FROM hits
 """
 
 

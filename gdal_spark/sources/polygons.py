@@ -27,7 +27,8 @@ POLY_SCHEMA = (
 def countries64_pdf(skew_poly0: bool = False) -> pd.DataFrame:
     """Driver-side pandas build of the 64-polygon layer (64 rows — the
     canonical broadcast-side dimension). skew_poly0 inflates polygon 0
-    to ~30% of the world to exercise hot-cell salting (FIXTURES F3)."""
+    to ~30% of the world (FIXTURES F3): it spreads over many more cell
+    keys, but no single (cell, poly_id) key becomes hot."""
     rows = []
     for p in range(derive.NPOLY):
         ring = derive.polygon_ring_np(p)
@@ -78,28 +79,16 @@ def countries64_cover(spark: SparkSession, res: int, skew_poly0: bool = False) -
     return cov_df.join(spark.createDataFrame(pdf, schema=POLY_SCHEMA), "poly_id")
 
 
-def countries64_dense_cover(spark: SparkSession, res: int, nv: int = 4096,
-                            skew_poly0: bool = False) -> DataFrame:
+def countries64_dense_cover(spark: SparkSession, res: int, nv: int = 4096) -> DataFrame:
     """Bench fixture: the countries64 ellipse boundaries sampled at `nv`
     vertices per ring (~real-country ring sizes, vs the 64-vertex
     canonical layer). Exists to measure the exact-stage Arrow transfer:
     with rings-as-columns each surviving candidate row would carry
     2*8*nv bytes into the PIP UDF; the broadcast-dict path carries 8.
-    Same join/plan shape as countries64_cover. skew_poly0 applies the
-    same analytic inflation as countries64_pdf (polygon 0 grabs a
-    dominant share of candidates — the hot-cogroup salting fixture)."""
+    Same join/plan shape as countries64_cover."""
     rows = []
     for p in range(derive.NPOLY):
         ring = scaled_ring_np(p, 1.0, nv_override=nv)
-        if skew_poly0 and p == 0:
-            prm = derive.polygon_params_np([0])
-            cx, cy = float(prm["cx"][0]), float(prm["cy"][0])
-            ring = np.column_stack([
-                np.clip(cx + (ring[:, 0] - cx) * derive.SKEW_FACTOR,
-                        -derive.SKEW_CLIP_X, derive.SKEW_CLIP_X),
-                np.clip(cy + (ring[:, 1] - cy) * derive.SKEW_FACTOR,
-                        -derive.SKEW_CLIP_Y, derive.SKEW_CLIP_Y),
-            ])
         rows.append({
             "poly_id": p,
             "xs": ring[:, 0].tolist(), "ys": ring[:, 1].tolist(),

@@ -61,41 +61,26 @@ def test_shuffle_matches_oracle(spark, oracle_plain):
     assert _engine_pairs(spark, "shuffle") == oracle_plain
 
 
-def test_salted_matches_oracle_on_skewed_polygons(spark, oracle_skew):
-    import gdal_spark.kernels.cells as cells
-
-    ring = np.column_stack([
-        np.asarray(polygons.countries64_pdf(True).iloc[0]["xs"]),
-        np.asarray(polygons.countries64_pdf(True).iloc[0]["ys"]),
-    ])
-    hot = [int(c) for c in cells.polygon_cover(ring, 6)]
-    got = _engine_pairs(spark, "salted", skew=True, hot_cells=hot, n_salt=4)
-    assert got == oracle_skew
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_matches_oracle_on_skewed_polygons(spark, oracle_skew, strategy):
+    """Polygon 0 inflated over ~30% of the world (FIXTURES F3): it
+    spreads over many cell keys, and both distributions keep its pairs."""
+    assert _engine_pairs(spark, strategy, skew=True) == oracle_skew
 
 
-def test_grouped_salted_all_keys_matches_oracle(spark, oracle_plain):
-    """Salting forced on for every (cell, poly_id) cogroup key: the
-    geometry row replicates per salt and the result set is unchanged."""
-    assert _engine_pairs(spark, "grouped_salted", n_salt=4) == oracle_plain
+@pytest.mark.parametrize("strategy", [
+    "rowrings", "salted", "grouped_salted", "grouped", "braodcast"])
+@pytest.mark.parametrize("join", ["points", "wkb"])
+def test_unknown_strategy_raises(spark, join, strategy):
+    from gdal_spark.operators.spatial_join import spatial_join_wkb
 
-
-def test_grouped_salted_hot_threshold_matches_oracle(spark, oracle_skew):
-    """Hot-only salting: one count-agg finds (cell, poly_id) keys above
-    the threshold; only those split across salts. The skewed fixture
-    (poly 0 blown up to grab a large candidate share) exercises both
-    the salted and unsalted key paths in one run."""
-    got = _engine_pairs(spark, "grouped_salted", skew=True,
-                        n_salt=4, salt_threshold=50)
-    assert got == oracle_skew
-
-
-def test_grouped_salted_threshold_never_hot_matches_oracle(spark, oracle_plain):
-    """Threshold above every group size: the hot set is empty, every
-    key keeps salt 0, and the plan degrades to the plain grouped
-    cogroup (the isin-on-empty-set edge)."""
-    got = _engine_pairs(spark, "grouped_salted",
-                        n_salt=4, salt_threshold=10**9)
-    assert got == oracle_plain
+    pts = spark.createDataFrame([(0, 1.0, 1.0)], "id long, lon double, lat double")
+    cov = polygons.countries64_cover(spark, res=6)
+    with pytest.raises(ValueError, match="strategy"):
+        if join == "points":
+            spatial_join_points_in_polygons(pts, cov, strategy=strategy)
+        else:
+            spatial_join_wkb(pts, cov, geom="lon", strategy=strategy)
 
 
 def test_every_point_in_at_most_one_plain_polygon(spark, oracle_plain):
@@ -157,16 +142,24 @@ def test_wkb_grouped_shuffle_matches_broadcast_dict(spark):
 def test_broadcast_band_engine_matches_shuffle_python_free(spark):
     """The default broadcast arm runs the band-table exact stage on the
     countries64 cover: same pairs as the grouped arm, and no Python in
-    the plan."""
+    the plan. Both broadcast engines (band table and, on the dense
+    cover, the Arrow kernel) emit the shuffle arm's output schema."""
     pts = docs.synth_docs(spark, 20000).select("doc_id", "doc_index", "lon", "lat")
     cov = polygons.countries64_cover(spark, res=5)
-    got = {}
+    got, schemas = {}, {}
     for st in ("broadcast", "shuffle"):
-        got[st] = sorted(map(tuple, spatial_join_points_in_polygons(
+        out = spatial_join_points_in_polygons(
             pts, cov, res=5, strategy=st, keep_point_cols=["doc_index"])
-            .select("doc_index", "poly_id").collect()))
+        schemas[st] = [(f.name, f.dataType) for f in out.schema.fields]
+        got[st] = sorted(map(tuple, out.select("doc_index", "poly_id").collect()))
     assert got["broadcast"] == got["shuffle"]
     assert len(got["broadcast"]) > 0
+    dense = spatial_join_points_in_polygons(
+        pts, polygons.countries64_dense_cover(spark, res=5, nv=4096), res=5,
+        keep_point_cols=["doc_index"])
+    assert "ArrowEvalPython" in dense._jdf.queryExecution().executedPlan().toString()
+    schemas["arrow"] = [(f.name, f.dataType) for f in dense.schema.fields]
+    assert schemas["broadcast"] == schemas["shuffle"] == schemas["arrow"]
     plan = spatial_join_points_in_polygons(
         pts, cov, res=5, keep_point_cols=["doc_index"]
     )._jdf.queryExecution().executedPlan().toString()

@@ -109,10 +109,8 @@ def _points(rings) -> pd.DataFrame:
     for y in (85.06, 86.5, 88.0, 89.99, 90.0, -85.06, -88.0, -90.0):
         add(rng.uniform(-180, 180, 40), y)
         add([155.0, 165.0, 176.0, -178.0, -176.0], y)
-    # lon -inf and -1e300 are left out: tiles.cell overflows a long on
-    # them under ANSI, in every engine, before any exact stage runs
     odd = [np.nan, np.inf, -np.inf, 1e300, -1e300, 0.0, 15.0]
-    for x in (np.nan, np.inf, 1e300, 0.0, 15.0):
+    for x in odd:
         add(x, odd)
     return pd.DataFrame({"id": np.arange(len(lon), dtype=np.int64),
                          "lon": lon, "lat": lat})
@@ -215,3 +213,21 @@ def test_huge_coordinates_keep_arrow_engine(spark):
         pts, cover, res=RES, keep_point_cols=["id"])
     assert "ArrowEvalPython" in out._jdf.queryExecution().executedPlan().toString()
     assert sorted(r["id"] for r in out.collect()) == [0, 1]
+
+
+def test_infinite_ring_vertex_joins_in_both_arms(spark):
+    """A ring whose first vertex has x = -inf must not overflow the
+    broadcast arm's driver-side cell test; both arms agree."""
+    ring = np.array([[-np.inf, 0], [10, 0], [10, 10], [-np.inf, 0]])
+    cover = spark.createDataFrame(
+        [(int(c), 0, ring[:, 0].tolist(), ring[:, 1].tolist(), -np.inf, 0.0, 10.0, 10.0)
+         for c in cells.polygon_cover(np.array([[-180, 0], [10, 0], [10, 10]]), RES)],
+        "cell bigint, poly_id bigint, xs array<double>, ys array<double>, "
+        "minx double, miny double, maxx double, maxy double")
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"id": [0, 1, 2], "lon": [5.0, 5.0, 20.0], "lat": [0.5, 9.0, 1.0]}))
+    got = {st: sorted(r["id"] for r in SJ.spatial_join_points_in_polygons(
+        pts, cover, res=RES, strategy=st, keep_point_cols=["id"]).collect())
+        for st in ("broadcast", "shuffle")}
+    assert got["broadcast"] == got["shuffle"]
+    assert 2 not in got["broadcast"] and 0 in got["broadcast"]

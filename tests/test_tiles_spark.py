@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from gdal_spark.functions import tiles as TF
 from gdal_spark.kernels import cells, mercator
+from gdal_spark.operators import tiling
 from gdal_spark.sources import derive, docs
 
 
@@ -57,6 +58,22 @@ def test_boundary_points_exact_rule(spark):
     assert out[0]["tx"] == 0          # lon=0 boundary -> lower tile
     assert out[1]["tx"] == 0          # world edge clamped
     assert out[2]["tx"] == 1          # px=384 -> tile 1
+
+
+def test_assign_tiles_clamps_extreme_longitudes(spark):
+    # lon = -inf / -1e300 must not overflow the long in ceil(...) - 1
+    # (ARITHMETIC_OVERFLOW under ANSI fails the job): like any point
+    # beyond the grid they clamp to its edge; finite boundaries hold
+    lons = [-np.inf, -1e300, -180.0, np.nextafter(-180.0, 0), 0.0,
+            1e-9, 1e300, np.inf, np.nan, None]
+    pdf = spark.createDataFrame(
+        [(i, x if x is None else float(x), 10.0) for i, x in enumerate(lons)],
+        "id long, lon double, lat double")
+    out = tiling.assign_tiles(pdf, zoom=12).orderBy("id").collect()
+    assert [r["tx"] for r in out] == [0, 0, 0, 0, 2047, 2048, 4095, 4095, 0, 0]
+    assert {r["ty_tms"] for r in out} == {mercator.lat_lon_to_tile(10.0, 0.0, 12)[1]}
+    geo = TF.geodetic_tile_columns(pdf, zoom=12).orderBy("id").collect()
+    assert [r["gtx"] for r in geo] == [0, 0, 0, 0, 4095, 4096, 8191, 8191, 0, 0]
 
 
 def test_spark_plan_is_codegen_only(spark):

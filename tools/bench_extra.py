@@ -12,16 +12,8 @@ Entries:
                              interleaved-doc table), default strategy
                              (band-table exact stage) — same plan
                              bench.py times
-  spatial_join_bigpoly_skew_grouped  4096-vertex cover with polygon 0
-                             inflated to hold the dominant candidate
-                             share, UNSALTED grouped cogroup (the hot
-                             cogroup pins one task — the control)
-  spatial_join_bigpoly_skew_salted   same input through the salted
-                             grouped path (hot keys auto-detected via
-                             salt_threshold, geometry replicated per
-                             salt) — VERDICT r4 item 4's criterion is
-                             this arm within 2x of the UNSKEWED
-                             spatial_join_bigpoly_grouped run
+  spatial_join_bigpoly_grouped  4096-vertex cover through the
+                             no-broadcast grouped cogroup
 """
 from __future__ import annotations
 
@@ -59,25 +51,21 @@ def _headline(spark, sf_dir):
         "doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
 
 
-def _bigpoly(strategy: str, skew: bool, **kw):
-    def run(spark, sf_dir):
-        from gdal_spark.operators.spatial_join import (
-            spatial_join_points_in_polygons,
-        )
-        from gdal_spark.sources import polygons
+def _bigpoly_grouped(spark, sf_dir):
+    from gdal_spark.operators.spatial_join import (
+        spatial_join_points_in_polygons,
+    )
+    from gdal_spark.sources import polygons
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        dense = polygons.countries64_dense_cover(
-            spark, res=6, nv=4096, skew_poly0=skew)
-        pts = (
-            spark.read.parquet(_doc_path(spark, 2000000))
-            .limit(100_000).repartition(cpus)
-        )
-        return spatial_join_points_in_polygons(
-            pts, dense, res=6, strategy=strategy,
-            keep_point_cols=["doc_id"], **kw,
-        )
-    return run
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    dense = polygons.countries64_dense_cover(spark, res=6, nv=4096)
+    pts = (
+        spark.read.parquet(_doc_path(spark, 2000000))
+        .limit(100_000).repartition(cpus)
+    )
+    return spatial_join_points_in_polygons(
+        pts, dense, res=6, strategy="shuffle", keep_point_cols=["doc_id"],
+    )
 
 
 def _rpc_dem(variant: str):
@@ -110,10 +98,7 @@ def _rpc_dem(variant: str):
 
 EXTRA = {
     "headline_join_tile": _headline,
-    "spatial_join_bigpoly_grouped": _bigpoly("shuffle", skew=False),
-    "spatial_join_bigpoly_skew_grouped": _bigpoly("shuffle", skew=True),
-    "spatial_join_bigpoly_skew_salted": _bigpoly(
-        "grouped_salted", skew=True, n_salt=8, salt_threshold=2000),
+    "spatial_join_bigpoly_grouped": _bigpoly_grouped,
     "rpc_dem_inverse_broadcast": _rpc_dem("broadcast"),
     "rpc_dem_inverse_gather": _rpc_dem("gather"),
 }

@@ -22,8 +22,6 @@ DEFAULT = ["headline_join_tile", "tile_assign_suite", "pyramid_counts",
            "rasterize_suite", "overview_suite", "similarity_topk", "knn",
            "minhash_lsh",
            "spatial_join_bigpoly_grouped",
-           "spatial_join_bigpoly_skew_grouped",
-           "spatial_join_bigpoly_skew_salted",
            "rpc_dem_inverse_broadcast", "rpc_dem_inverse_gather"]
 
 WORKER = r"""
