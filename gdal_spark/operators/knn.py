@@ -32,7 +32,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,23 +41,12 @@ from ..functions import tiles as TF
 ORIGIN_SHIFT = TF.ORIGIN_SHIFT
 
 
-def _cell_xy(lon, lat, res: int):
-    """(cx, cy) integer cell coords (XYZ orientation) at `res`."""
-    lim = 2**res - 1
-    tx, ty_tms = TF.tms_tile(lon, lat, res)
-    return TF.clamp(tx, 0, lim), TF.clamp(TF.xyz_ty(ty_tms, res), 0, lim)
-
-
 def _merc_cells(df: DataFrame, id_col: str, lon: str, lat: str, res: int, p: str) -> DataFrame:
     """(_{p}id, _{p}mx, _{p}my, _{p}cx, _{p}cy): id, mercator meters, cell."""
-    cx, cy = _cell_xy(F.col(lon), F.col(lat), res)
-    return df.select(
-        F.col(id_col).alias(f"_{p}id"),
-        TF.merc_mx(F.col(lon)).alias(f"_{p}mx"),
-        TF.merc_my(F.col(lat)).alias(f"_{p}my"),
-        cx.alias(f"_{p}cx"),
-        cy.alias(f"_{p}cy"),
-    )
+    x, y = TF.quote(lon), TF.quote(lat)
+    cx, cy = TF.cell_xy(x, y, res)
+    return df.selectExpr(f"{TF.quote(id_col)} AS _{p}id", f"{TF.merc_mx(x)} AS _{p}mx",
+                         f"{TF.merc_my(y)} AS _{p}my", f"{cx} AS _{p}cx", f"{cy} AS _{p}cy")
 
 
 def knn_join(
@@ -100,9 +89,8 @@ def knn_join(
     qcells_schema = T.StructType(  # (_qid, _qmx, _qmy) + the ring cell
         qsdf.schema.fields[:3] + [T.StructField(c, T.LongType(), False) for c in ("_cx", "_cy")])
     topk_schema = T.StructType([qf, pf, T.StructField("_d2", T.DoubleType(), False)])
-    win = Window.partitionBy("_qid").orderBy(F.col("_d2").asc(), F.col("_pid").asc())
-    d2 = ((F.col("_pmx") - F.col("_qmx")) * (F.col("_pmx") - F.col("_qmx"))
-          + (F.col("_pmy") - F.col("_qmy")) * (F.col("_pmy") - F.col("_qmy")))
+    rank = F.expr("row_number() OVER (PARTITION BY _qid ORDER BY _d2, _pid)")
+    d2 = F.expr("((_pmx - _qmx) * (_pmx - _qmx)) + ((_pmy - _qmy) * (_pmy - _qmy))")
 
     finished: list[pd.DataFrame] = []
     carried = pd.DataFrame()  # earlier rounds' top-k of the still-pending queries
@@ -124,12 +112,11 @@ def knn_join(
         qcells = spark.createDataFrame(qc[qcells_schema.names], qcells_schema)
         cand = pts.join(
             F.broadcast(qcells),
-            (pts["_pcx"] == qcells["_cx"]) & (pts["_pcy"] == qcells["_cy"]),
+            F.expr("_pcx = _cx AND _pcy = _cy"),
         ).select("_qid", "_pid", d2.alias("_d2"))
         if not carried.empty:
             cand = cand.unionByName(spark.createDataFrame(carried, topk_schema))
-        topk = (cand.withColumn("_rank", F.row_number().over(win))
-                .filter(F.col("_rank") <= k).toPandas())
+        topk = cand.withColumn("_rank", rank).filter(f"_rank <= {k}").toPandas()
         # done <=> k candidates found AND kth distance <= (s*w)^2,
         # or the whole grid has been explored
         if s > lim:

@@ -35,9 +35,8 @@ except ImportError:
 
 def to_mercator(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
     """EPSG:4326 -> EPSG:3857 columns (mx, my)."""
-    return df.withColumn("mx", TF.merc_mx(F.col(lon))).withColumn(
-        "my", TF.merc_my(F.col(lat))
-    )
+    return df.withColumns({"mx": F.expr(TF.merc_mx(TF.quote(lon))),
+                           "my": F.expr(TF.merc_my(TF.quote(lat)))})
 
 
 def from_mercator(df: DataFrame, mx: str = "mx", my: str = "my") -> DataFrame:

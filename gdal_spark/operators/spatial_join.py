@@ -93,7 +93,8 @@ def _pip_dict_udf(rings_bc):
 
 def assign_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
                 res: int = 6, out: str = "cell") -> DataFrame:
-    return df.withColumn(out, tile_fns.cell(F.col(lon), F.col(lat), res))
+    return df.withColumn(
+        out, F.expr(tile_fns.cell(tile_fns.quote(lon), tile_fns.quote(lat), res)))
 
 
 def _check_strategy(strategy: str) -> None:
@@ -106,8 +107,8 @@ def _check_strategy(strategy: str) -> None:
 def _envelope(lon: str, lat: str) -> Column:
     """Envelope prefilter on a joined cover row (the bbox stage of
     FilterGeometry), edges inclusive."""
-    return ((F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-            & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy")))
+    x, y = tile_fns.quote(lon), tile_fns.quote(lat)
+    return F.expr(f"{x} >= minx AND {x} <= maxx AND {y} >= miny AND {y} <= maxy")
 
 
 @F.pandas_udf(T.StructType([
@@ -600,20 +601,14 @@ def _collect_cover(cover: DataFrame, res: int, extra: list[str]):
     One job, no shuffle: only the row whose cell holds the ring's
     first vertex carries the ring, so each ring crosses about once; a
     polygon with no such row (the vertex rounds into a neighbour cell)
-    costs one filtered job more. The test is one SQL string: built
-    from Columns it costs ~50 py4j calls per join. This is the
-    dimension side of a broadcast join — collecting it is as
-    legitimate as F.broadcast(cover). x = -inf would overflow the long
-    in ceil(...) - 1; greatest() floors it, and every x it changes,
-    null included, clamps to column 0 either way."""
-    n, lim = 1 << res, (1 << res) - 1
-    x, y = "try_element_at(xs, 1)", "try_element_at(ys, 1)"
-    tx = f"ceil(greatest(({x} + 180D) * {n}D / 360D, -1D)) - 1"
-    ty = f"{lim} - (ceil((ln(tan(radians(45D + {y} / 2D))) / pi() + 1D) * {n / 2}D) - 1)"
-    first = F.expr(f"cell = ({n * n} | shiftleft(least(greatest({tx}, 0), {lim}), {res})"
-                   f" | least(greatest({ty}, 0), {lim}))")
-    pdf = cover.select(*_KEY_COLS, *extra, F.when(first, F.col("xs")).alias("_xs"),
-                       F.when(first, F.col("ys")).alias("_ys")).toPandas()
+    costs one filtered job more. The test is SQL text, the cell
+    expression of `assign_cell`: built from Columns it costs hundreds
+    of py4j calls per join. This is the dimension side of a broadcast
+    join — collecting it is as legitimate as F.broadcast(cover)."""
+    first = "cell = " + tile_fns.cell("try_element_at(xs, 1)", "try_element_at(ys, 1)", res)
+    pdf = cover.selectExpr(*map(tile_fns.quote, _KEY_COLS + extra),
+                           f"CASE WHEN {first} THEN xs END AS _xs",
+                           f"CASE WHEN {first} THEN ys END AS _ys").toPandas()
     has = pdf["_xs"].notna().to_numpy()
     rings = dict(zip(pdf["poly_id"][has], zip(pdf["_xs"][has], pdf["_ys"][has])))
     keys = pdf.drop(columns=["_xs", "_ys"])
@@ -735,22 +730,21 @@ def _band_table(keys: pd.DataFrame, rings: dict, res: int):
     return pdf, k
 
 
-def _band_condition(lon: Column, lat: Column, k: int) -> Column:
-    """The band table's exact test: `_band_lo <= lat < _band_hi`, the
-    longitude envelope, then the XOR of k crossing terms in the
-    point-relative form of kernels.pip.point_in_ring. The band bounds
-    come first: a division is safe only for a point inside the band."""
+def _band_condition(lon: str, lat: str, k: int) -> Column:
+    """The band table's exact test on columns `lon`, `lat`:
+    `_band_lo <= lat < _band_hi`, the longitude envelope, then the XOR
+    of k crossing terms in the point-relative form of
+    kernels.pip.point_in_ring. The band bounds come first: a division
+    is safe only for a point inside the band."""
+    x, y = tile_fns.quote(lon), tile_fns.quote(lat)
     odd = None
     for j in range(k):
-        x1 = F.col(f"_b{j}x1") - lon
-        y1 = F.col(f"_b{j}y1") - lat
-        x2 = F.col(f"_b{j}x2") - lon
-        y2 = F.col(f"_b{j}y2") - lat
-        cross = (x1 * y2 - x2 * y1) / (y2 - y1) > 0.0
-        odd = cross if odd is None else odd != cross
-    return ((lat >= F.col("_band_lo")) & (lat < F.col("_band_hi"))
-            & (lon >= F.col("_band_minx")) & (lon <= F.col("_band_maxx"))
-            & odd)
+        x1, y1, x2, y2 = (f"(_b{j}{c} - {v})" for c, v in
+                          (("x1", x), ("y1", y), ("x2", x), ("y2", y)))
+        cross = f"((({x1} * {y2}) - ({x2} * {y1})) / ({y2} - {y1}) > {tile_fns.dbl(0.0)})"
+        odd = cross if odd is None else f"({odd} != {cross})"
+    return F.expr(f"{y} >= _band_lo AND {y} < _band_hi"
+                  f" AND {x} >= _band_minx AND {x} <= _band_maxx AND {odd}")
 
 
 def spatial_join_points_in_polygons(
@@ -797,7 +791,7 @@ def spatial_join_points_in_polygons(
                for c in pdf.columns[2 + len(extra):]])
         table = cover.sparkSession.createDataFrame(pdf, schema)
         return (pts.join(F.broadcast(table), "cell")
-                .filter(_band_condition(F.col(lon), F.col(lat), k))
+                .filter(_band_condition(lon, lat, k))
                 .select(*keep, *keep_poly))
     # broadcast-dict form: candidates carry only poly_id into the Arrow
     # exact stage (after the JVM envelope short circuit); rings cross

@@ -78,23 +78,17 @@ def spatial_partition(df: DataFrame, *, res: int = 10, lon: str = "lon",
     The Z-order column expression interleaves 16 bits of tx/ty via the
     shift-or ladder (kernels.cells.zorder_code twin) — still plain
     codegen column math."""
-    from ..functions import tiles as TF
-
-    lim = 2**res - 1
-    tx, ty_tms = TF.tms_tile(F.col(lon), F.col(lat), res)
-    txc = TF.clamp(tx, 0, lim)
-    tyc = TF.clamp(TF.xyz_ty(ty_tms, res), 0, lim)
-
-    def spread(c):
-        c = c.bitwiseAND(F.lit(0xFFFF))
-        c = (c.bitwiseOR(F.shiftleft(c, 8))).bitwiseAND(F.lit(0x00FF00FF))
-        c = (c.bitwiseOR(F.shiftleft(c, 4))).bitwiseAND(F.lit(0x0F0F0F0F))
-        c = (c.bitwiseOR(F.shiftleft(c, 2))).bitwiseAND(F.lit(0x33333333))
-        c = (c.bitwiseOR(F.shiftleft(c, 1))).bitwiseAND(F.lit(0x55555555))
+    def spread(c: str) -> str:
+        c = f"({c} & 65535)"
+        for sh, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555)):
+            c = f"(({c} | shiftleft({c}, {sh})) & {mask})"
         return c
 
-    z = spread(txc).bitwiseOR(F.shiftleft(spread(tyc), 1))
-    out = df.withColumn("zorder", z)
+    # the cell coords are columns first: spread() repeats its input 32 times
+    txc, tyc = TF.cell_xy(TF.quote(lon), TF.quote(lat), res)
+    out = (df.withColumns({"_ztx": F.expr(txc), "_zty": F.expr(tyc)})
+           .withColumn("zorder", F.expr(f"{spread('_ztx')} | shiftleft({spread('_zty')}, 1)"))
+           .drop("_ztx", "_zty"))
     if num_partitions:
         return out.repartitionByRange(num_partitions, F.col("zorder"))
     return out.repartitionByRange(F.col("zorder"))

@@ -868,19 +868,13 @@ def _rect_layer(spark: SparkSession, sf_dir: str, table: str, key: str,
         F.col("x1").alias("maxx"), F.col("y1").alias("maxy"),
     )
     # covering cells of the rect bbox at `res` (engine-side explode)
-    lim = 2**res - 1
-    tx0, ty0_tms = TF.tms_tile(F.col("minx"), F.col("miny"), res)
-    tx1, ty1_tms = TF.tms_tile(F.col("maxx"), F.col("maxy"), res)
-    cx0 = TF.clamp(tx0, 0, lim)
-    cx1 = TF.clamp(tx1, 0, lim)
-    cy_a = TF.clamp(TF.xyz_ty(ty0_tms, res), 0, lim)
-    cy_b = TF.clamp(TF.xyz_ty(ty1_tms, res), 0, lim)
-    cy0 = F.least(cy_a, cy_b)
-    cy1 = F.greatest(cy_a, cy_b)
+    cx0, cy_a = TF.cell_xy("minx", "miny", res)
+    cx1, cy_b = TF.cell_xy("maxx", "maxy", res)
     # build the covering-cell list as a cross of two sequences
     out = (
-        geo.withColumn("_cxs", F.sequence(cx0, cx1))
-        .withColumn("_cys", F.sequence(cy0, cy1))
+        geo.withColumns({
+            "_cxs": F.expr(f"sequence({cx0}, {cx1})"),
+            "_cys": F.expr(f"sequence(least({cy_a}, {cy_b}), greatest({cy_a}, {cy_b}))")})
         .withColumn(
             "cell",
             F.explode(F.expr(
@@ -2749,6 +2743,19 @@ def sql_contour_polygonize() -> str:
     return contour.contour_rings_oracle_sql(11, 32, bv)
 
 
+def _warp_dest_pixels(spark: SparkSession, W: int, D: int) -> DataFrame:
+    """(did, px, py): the centres of a D x D lon/lat destination grid
+    (lon from -180, lat from 85 down to -85), forward-projected to
+    global pixel coords of a W x W mercator source grid."""
+    lon = f"(((dx + {TF.dbl(0.5)}) * {TF.dbl(360.0 / D)}) - {TF.dbl(180.0)})"
+    lat = f"({TF.dbl(85.0)} - ((dy + {TF.dbl(0.5)}) * {TF.dbl(170.0 / D)}))"
+    os_, os2, w = TF.dbl(TF.ORIGIN_SHIFT), TF.dbl(2.0 * TF.ORIGIN_SHIFT), TF.dbl(W)
+    return spark.range(D * D).selectExpr(
+        "id AS did", f"id % {D} AS dx", f"CAST(id / {D} AS BIGINT) AS dy",
+    ).selectExpr("did", f"((({TF.merc_mx(lon)} + {os_}) / {os2}) * {w}) AS px",
+                 f"((({os_} - {TF.merc_my(lat)}) / {os2}) * {w}) AS py")
+
+
 def q_warp_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster warp: resample the 32x32 world-mercator band onto a
     24x24 PLATE-CARREE (EPSG:4326) grid — per destination pixel,
@@ -2761,20 +2768,7 @@ def q_warp_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     band = raster.synth_band(spark, zoom=2, tile_px=8)  # 32x32 mercator px
     W, D = 32, 24
-    d = spark.range(D * D).select(
-        F.col("id").alias("did"),
-        (F.col("id") % D).alias("dx"),
-        (F.col("id") / D).cast("bigint").alias("dy"),
-    )
-    lon = (F.col("dx") + F.lit(0.5)) * F.lit(360.0 / D) - F.lit(180.0)
-    lat = F.lit(85.0) - (F.col("dy") + F.lit(0.5)) * F.lit(170.0 / D)
-    # forward mercator -> global pixel coords at the source grid size
-    mx = TF.merc_mx(lon)
-    my = TF.merc_my(lat)
-    os_f = TF.ORIGIN_SHIFT
-    px = (mx + F.lit(os_f)) / F.lit(2.0 * os_f) * F.lit(float(W))
-    py = (F.lit(os_f) - my) / F.lit(2.0 * os_f) * F.lit(float(W))
-    pts = d.select("did", px.alias("px"), py.alias("py"))
+    pts = _warp_dest_pixels(spark, W, D)
     out = focal.sample_bilinear(band, pts, width=W, height=W, id_col="did")
     # normalize by 2^31 before rounding: the 1-ulp trig wobble in the
     # dest->src mapping perturbs the sampled value by ~1e-6 absolute;
@@ -2829,19 +2823,7 @@ def q_warp_resample_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     band = raster.synth_band(spark, zoom=2, tile_px=8)  # 32x32 mercator px
     W, D = 32, 24
-    d = spark.range(D * D).select(
-        F.col("id").alias("did"),
-        (F.col("id") % D).alias("dx"),
-        (F.col("id") / D).cast("bigint").alias("dy"),
-    )
-    lon = (F.col("dx") + F.lit(0.5)) * F.lit(360.0 / D) - F.lit(180.0)
-    lat = F.lit(85.0) - (F.col("dy") + F.lit(0.5)) * F.lit(170.0 / D)
-    mx = TF.merc_mx(lon)
-    my = TF.merc_my(lat)
-    os_f = TF.ORIGIN_SHIFT
-    px = (mx + F.lit(os_f)) / F.lit(2.0 * os_f) * F.lit(float(W))
-    py = (F.lit(os_f) - my) / F.lit(2.0 * os_f) * F.lit(float(W))
-    pts = d.select("did", px.alias("px"), py.alias("py"))
+    pts = _warp_dest_pixels(spark, W, D)
     tiles = tile_raster.tiles_from_pixels(band, tile=8)
     out = tile_raster.sample_cubic_tiles(
         tiles, pts, tile=8, width=W, height=W, id_col="did"
@@ -2902,19 +2884,7 @@ def q_warp_resample_cubicspline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     band = raster.synth_band(spark, zoom=2, tile_px=8)  # 32x32 mercator px
     W, D = 32, 24
-    d = spark.range(D * D).select(
-        F.col("id").alias("did"),
-        (F.col("id") % D).alias("dx"),
-        (F.col("id") / D).cast("bigint").alias("dy"),
-    )
-    lon = (F.col("dx") + F.lit(0.5)) * F.lit(360.0 / D) - F.lit(180.0)
-    lat = F.lit(85.0) - (F.col("dy") + F.lit(0.5)) * F.lit(170.0 / D)
-    mx = TF.merc_mx(lon)
-    my = TF.merc_my(lat)
-    os_f = TF.ORIGIN_SHIFT
-    px = (mx + F.lit(os_f)) / F.lit(2.0 * os_f) * F.lit(float(W))
-    py = (F.lit(os_f) - my) / F.lit(2.0 * os_f) * F.lit(float(W))
-    pts = d.select("did", px.alias("px"), py.alias("py"))
+    pts = _warp_dest_pixels(spark, W, D)
     tiles = tile_raster.tiles_from_pixels(band, tile=8)
     out = tile_raster.sample_cubic_tiles(
         tiles, pts, tile=8, width=W, height=W, id_col="did",
@@ -2978,19 +2948,7 @@ def q_warp_resample_lanczos(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     band = raster.synth_band(spark, zoom=2, tile_px=8)
     W, D = 32, 24
-    d = spark.range(D * D).select(
-        F.col("id").alias("did"),
-        (F.col("id") % D).alias("dx"),
-        (F.col("id") / D).cast("bigint").alias("dy"),
-    )
-    lon = (F.col("dx") + F.lit(0.5)) * F.lit(360.0 / D) - F.lit(180.0)
-    lat = F.lit(85.0) - (F.col("dy") + F.lit(0.5)) * F.lit(170.0 / D)
-    mx = TF.merc_mx(lon)
-    my = TF.merc_my(lat)
-    os_f = TF.ORIGIN_SHIFT
-    px = (mx + F.lit(os_f)) / F.lit(2.0 * os_f) * F.lit(float(W))
-    py = (F.lit(os_f) - my) / F.lit(2.0 * os_f) * F.lit(float(W))
-    pts = d.select("did", px.alias("px"), py.alias("py"))
+    pts = _warp_dest_pixels(spark, W, D)
     tiles = tile_raster.tiles_from_pixels(band, tile=8)
     out = tile_raster.sample_lanczos_tiles(
         tiles, pts, tile=8, width=W, height=W, id_col="did"

@@ -124,7 +124,7 @@ def _band_pairs(spark, pts, keys, rings):
     table = spark.createDataFrame(pdf, schema)
     p = SJ.assign_cell(spark.createDataFrame(pts), res=RES)
     got = (p.join(F.broadcast(table), "cell")
-           .filter(SJ._band_condition(F.col("lon"), F.col("lat"), k))
+           .filter(SJ._band_condition("lon", "lat", k))
            .select("id", "row_id").collect())
     return sorted(map(tuple, got)), k, p.select("id", "cell").toPandas()
 

@@ -20,7 +20,9 @@ def _doc_points(spark, n=4000):
 
 
 def test_tile_columns_match_kernel(spark):
-    for zoom in (0, 1, 2, 5, 12):
+    # quadkeys are built in chunks of at most 18 digits: 13, 18, 19 and
+    # 24 cross the chunk boundary
+    for zoom in (0, 1, 2, 5, 12, 13, 18, 19, 24):
         df = TF.tile_columns(_doc_points(spark), zoom=zoom, clamped=True)
         pdf = df.orderBy("doc_index").toPandas()
         i = pdf["doc_index"].to_numpy()
@@ -41,7 +43,7 @@ def test_tile_columns_match_kernel(spark):
 
 def test_cell_column_matches_kernel(spark):
     for res in (1, 6, 10):
-        df = _doc_points(spark).withColumn("cell", TF.cell(F.col("lon"), F.col("lat"), res))
+        df = _doc_points(spark).withColumn("cell", F.expr(TF.cell("lon", "lat", res)))
         pdf = df.orderBy("doc_index").toPandas()
         i = pdf["doc_index"].to_numpy()
         expected = cells.cell(derive.lat_np(i), derive.lon_np(i), res)
