@@ -3,9 +3,8 @@
 entry()      — flagship spatial-join + tile-assignment pipeline (sf0.001)
 queries()    — one entry per implemented operator (SURVEY.md §2 + the
                training-data-pipeline extensions)
-oracle_sql() — DuckDB-runnable ANSI SQL twins; every query whose result
-               is exactly reproducible cross-engine has one (only the
-               approximate-by-design similarity_ivf is rows-only).
+oracle_sql() — DuckDB-runnable ANSI SQL twins, one exact oracle per
+               query (same names, same order).
 
 Implementations live in gdal_spark.queries — this module is the thin
 stable adapter the driver imports.

@@ -18,7 +18,8 @@ import __spark_entry__ as E  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 SUBSET = ["tile_assign_suite", "spatial_join", "spatial_join_bigring",
-          "ogr_summary", "text_suite", "similarity_topk"]
+          "ogr_summary", "text_suite", "similarity_topk",
+          "warp_kernels_suite", "terrain_suite"]
 
 
 @pytest.fixture(scope="module")

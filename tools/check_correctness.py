@@ -62,6 +62,10 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if name not in oracles:
+            print(f"FAIL  {name}: no oracle")
+            failures.append(name)
+            continue
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
@@ -70,12 +74,6 @@ def main() -> int:
             failures.append(name)
             continue
         t1 = time.time()
-        if name not in oracles:
-            print(f"ok?   {name}: rows={len(got)} (rows-only, no oracle) "
-                  f"[spark {t1 - t0:.1f}s]")
-            if len(got) == 0:
-                print(f"WARN  {name}: zero rows")
-            continue
         try:
             exp = con.execute(oracles[name]).df()
         except Exception as ex:  # noqa: BLE001
