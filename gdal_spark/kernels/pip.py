@@ -152,13 +152,3 @@ def point_in_polygon(xs, ys, rings: list[np.ndarray]) -> np.ndarray:
     for hole in rings[1:]:
         inside &= ~point_in_ring(xs, ys, hole)
     return inside
-
-
-def filter_points_staged(xs, ys, ring_xy: np.ndarray) -> np.ndarray:
-    """FilterGeometry staging for point features vs a polygon filter
-    (ogrlayer.cpp:2253-2325): bbox reject, then for points the exact
-    containment test (points whose bbox == the point itself: the
-    'envelope contained -> accept' stage collapses into the bbox pass).
-    Semantically equal to point_in_ring with envelope pretest; kept as a
-    named stage so tests can pin the short-circuit order."""
-    return point_in_ring(xs, ys, ring_xy, test_envelope=True)

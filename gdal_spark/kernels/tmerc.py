@@ -199,22 +199,6 @@ def inv_series_terms(xi: str = "xi", eta: str = "eta") -> tuple[str, str]:
     return xi_terms, eta_terms
 
 
-def newton_step_sql(tau: str, tp: str) -> tuple[str, str, str]:
-    """One Newton step of Karney eq. 19-21 as SQL: returns
-    (t1_expr, sig_expr_over(t1), next_tau_expr_over(t1, sig)) with
-    `t1`/`sig` as the free variable names the caller must bind."""
-    ecc = _r(ECC)
-    e2 = _r(E2)
-    t1_expr = f"sqrt(1.0 + {tau}*{tau})"
-    sig_expr = sinh_sql(f"{ecc} * " + atanh_sql(f"{ecc} * {tau} / t1"))
-    next_expr = (
-        f"{tau} - (({tau} * sqrt(1.0 + sig*sig) - sig * t1 - {tp})"
-        f" / ((sqrt((1.0 + sig*sig) * (1.0 + {tau}*{tau})) - sig * {tau})"
-        f" * (1.0 - {e2}) * t1 / (1.0 + (1.0 - {e2}) * {tau}*{tau})))"
-    )
-    return t1_expr, sig_expr, next_expr
-
-
 def forward_sql_ctes(src: str, zone: int, *, lon: str = "lon",
                      lat: str = "lat", keep: str = "id") -> str:
     """CTE chain computing (easting, northing) from `src`(keep, lon,

@@ -1,21 +1,19 @@
-"""Focal / neighborhood raster operators — slope, hillshade, bilinear
-sampling, IDW gridding.
+"""Focal / neighborhood raster operators — bilinear sampling,
+proximity, footprint, viewshed, IDW gridding.
 
 The reference computes these as windowed scans over one in-memory
 raster (apps/gdalalg_raster_slope.cpp, alg/gdal_interpolateatpoint.cpp,
 alg/gdalgrid.cpp). Distributed, a 2-D stencil needs a **halo
-exchange**: each pixel joins its neighbors by (gx+dx, gy+dy) — an
-equi-join on shifted pixel keys, NOT Window.partitionBy (1-D only,
-SURVEY §2.5). At tile granularity the same join runs on neighbor tile
-ids with per-tile UDFs; at pixel granularity (used here) the whole
-stencil stays in JVM column math, which is both simpler and exact.
+exchange**, NOT Window.partitionBy (1-D only, SURVEY §2.5). The 3x3
+terrain ops (slope, aspect, hillshade, TPI/TRI/roughness) run on the
+tile-array model in operators.tile_raster: one shuffle of tile edge
+strips, then a numpy stencil per tile. OFFSETS_3X3 below is their
+neighbour order, which the DuckDB oracles read.
 
-Slope/aspect use the Horn 3x3 kernel (alg/gdalsdttransformer family —
-apps/gdalalg_raster_slope.cpp); hillshade combines slope/aspect with a
-sun vector (apps/gdalalg_raster_hillshade.cpp); bilinear sampling
-follows gcore/gdal_interpolateatpoint.cpp; IDW follows the
-GGA_InverseDistanceToAPower semantics of alg/gdalgrid.cpp:91-199 with
-the cell-bucketed neighbor gather replacing the quadtree.
+Bilinear sampling follows gcore/gdal_interpolateatpoint.cpp; IDW
+follows the GGA_InverseDistanceToAPower semantics of
+alg/gdalgrid.cpp:91-199 with the cell-bucketed neighbor gather
+replacing the quadtree.
 """
 from __future__ import annotations
 
@@ -23,138 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 OFFSETS_3X3 = [(dx, dy) for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
-
-
-def _halo_join(band: DataFrame, offsets=OFFSETS_3X3) -> DataFrame:
-    """Gather each pixel's neighborhood as columns v_<dx>_<dy> via
-    shifted equi-joins (edge pixels: missing neighbors = center value,
-    the reference's edge replication).
-
-    NOTE: this is the per-pixel COMPAT path (8 shuffles per focal op).
-    The scale path is operators.tile_raster.halo_apply — one shuffle of
-    edge strips + a per-tile numpy stencil; the tile queries prove both
-    produce bit-identical results."""
-    out = band.select("gx", "gy", F.col("value").alias("v_0_0"))
-    base = band.select(
-        F.col("gx").alias("_nx"), F.col("gy").alias("_ny"),
-        F.col("value").alias("_nv"),
-    )
-    for dx, dy in offsets:
-        if dx == 0 and dy == 0:
-            continue
-        name = f"v_{dx}_{dy}".replace("-", "m")
-        out = (
-            out.join(
-                base.select(
-                    (F.col("_nx") - dx).alias("gx"),
-                    (F.col("_ny") - dy).alias("gy"),
-                    F.col("_nv").alias(name),
-                ),
-                ["gx", "gy"],
-                "left",
-            )
-            .withColumn(name, F.coalesce(F.col(name), F.col("v_0_0")))
-        )
-    return out
-
-
-def slope_horn(band: DataFrame, *, cellsize: float = 1.0, z_factor: float = 1.0) -> DataFrame:
-    """Horn slope in degrees: the 3x3 kernel of gdaldem slope
-    (apps/gdalalg_raster_slope.cpp). Returns (gx, gy, slope_deg)."""
-    n = _halo_join(band)
-    # Horn gradients (neighbors named v_<dx>_<dy>, m = minus)
-    dzdx = (
-        (F.col("v_1_m1") + 2 * F.col("v_1_0") + F.col("v_1_1"))
-        - (F.col("v_m1_m1") + 2 * F.col("v_m1_0") + F.col("v_m1_1"))
-    ) / (8.0 * cellsize)
-    dzdy = (
-        (F.col("v_m1_1") + 2 * F.col("v_0_1") + F.col("v_1_1"))
-        - (F.col("v_m1_m1") + 2 * F.col("v_0_m1") + F.col("v_1_m1"))
-    ) / (8.0 * cellsize)
-    slope = F.atan(F.lit(z_factor) * F.sqrt(dzdx * dzdx + dzdy * dzdy)) * F.lit(180.0 / 3.141592653589793)
-    return n.select("gx", "gy", slope.alias("slope_deg"))
-
-
-def hillshade(band: DataFrame, *, cellsize: float = 1.0, z_factor: float = 1.0,
-              azimuth_deg: float = 315.0, altitude_deg: float = 45.0) -> DataFrame:
-    """Classic hillshade (apps/gdalalg_raster_hillshade.cpp): shade =
-    sin(alt)*cos(slope) + cos(alt)*sin(slope)*cos(az - 90 - aspect),
-    scaled to 0..255. Returns (gx, gy, shade)."""
-    import math
-
-    n = _halo_join(band)
-    dzdx = (
-        (F.col("v_1_m1") + 2 * F.col("v_1_0") + F.col("v_1_1"))
-        - (F.col("v_m1_m1") + 2 * F.col("v_m1_0") + F.col("v_m1_1"))
-    ) / (8.0 * cellsize)
-    dzdy = (
-        (F.col("v_m1_1") + 2 * F.col("v_0_1") + F.col("v_1_1"))
-        - (F.col("v_m1_m1") + 2 * F.col("v_0_m1") + F.col("v_1_m1"))
-    ) / (8.0 * cellsize)
-    slope = F.atan(F.lit(z_factor) * F.sqrt(dzdx * dzdx + dzdy * dzdy))
-    aspect = F.atan2(dzdy, -dzdx)
-    az = math.radians(azimuth_deg)
-    alt = math.radians(altitude_deg)
-    shade = (
-        F.lit(math.sin(alt)) * F.cos(slope)
-        + F.lit(math.cos(alt)) * F.sin(slope) * F.cos(F.lit(az - math.pi / 2.0) - aspect)
-    )
-    out = F.greatest(F.lit(0.0), F.lit(255.0) * shade)
-    return n.select("gx", "gy", out.alias("shade"))
-
-
-def terrain_metrics(band: DataFrame) -> DataFrame:
-    """TPI / TRI / roughness in one halo pass (apps/gdalalg_raster_tpi
-    .cpp, _tri.cpp, _roughness.cpp semantics, gdaldem family):
-
-      tpi       = center - mean(8 neighbors)
-      tri       = mean(|center - neighbor|) over the 8 neighbors
-                  (Wilson variant, gdaldem's default)
-      roughness = max(9-cell window) - min(9-cell window)
-
-    Integer bands stay exact: sums of 8 int64s divided by 8.0 are
-    single correctly-rounded doubles. Edge pixels replicate the center
-    for missing neighbors (same convention as slope_horn)."""
-    n = _halo_join(band)
-    nbrs = [f"v_{dx}_{dy}".replace("-", "m") for dx, dy in OFFSETS_3X3 if (dx, dy) != (0, 0)]
-    s = None
-    for c in nbrs:
-        s = F.col(c) if s is None else s + F.col(c)
-    tpi = F.col("v_0_0") - s / F.lit(8.0)
-    absdev = None
-    for c in nbrs:
-        term = F.abs(F.col("v_0_0") - F.col(c))
-        absdev = term if absdev is None else absdev + term
-    tri = absdev / F.lit(8.0)
-    allc = ["v_0_0", *nbrs]
-    rough = F.greatest(*[F.col(c) for c in allc]) - F.least(*[F.col(c) for c in allc])
-    return n.select(
-        "gx", "gy",
-        tpi.alias("tpi"), tri.alias("tri"), rough.cast("bigint").alias("roughness"),
-    )
-
-
-def aspect(band: DataFrame, *, cellsize: float = 1.0) -> DataFrame:
-    """Horn aspect in degrees from north, clockwise (gdaldem aspect,
-    apps/gdalalg_raster_aspect.cpp): atan2(dz/dy, -dz/dx) converted to
-    compass bearing; flat cells (both gradients 0) -> -9999."""
-    n = _halo_join(band)
-    dzdx = (
-        (F.col("v_1_m1") + 2 * F.col("v_1_0") + F.col("v_1_1"))
-        - (F.col("v_m1_m1") + 2 * F.col("v_m1_0") + F.col("v_m1_1"))
-    ) / (8.0 * cellsize)
-    dzdy = (
-        (F.col("v_m1_1") + 2 * F.col("v_0_1") + F.col("v_1_1"))
-        - (F.col("v_m1_m1") + 2 * F.col("v_0_m1") + F.col("v_1_m1"))
-    ) / (8.0 * cellsize)
-    deg = F.atan2(dzdy, -dzdx) * F.lit(180.0 / 3.141592653589793)
-    # convert math angle to compass: 90 - deg, wrapped to [0, 360)
-    compass = (F.lit(90.0) - deg + F.lit(360.0)) % F.lit(360.0)
-    flat = (dzdx == 0.0) & (dzdy == 0.0)
-    return n.select(
-        "gx", "gy",
-        F.when(flat, F.lit(-9999.0)).otherwise(compass).alias("aspect_deg"),
-    )
 
 
 def sample_bilinear(band: DataFrame, points: DataFrame, *, width: int, height: int,
@@ -714,57 +580,6 @@ def cumulative_viewshed(band: DataFrame, *, width: int, spacing: int,
     )
 
 
-def viewshed_explode(band: DataFrame, *, width: int, ox: int, oy: int,
-                     obs_height: float = 2.0,
-                     height: int | None = None) -> DataFrame:
-    """Original viewshed plan shape, kept for comparison benches: pixels
-    explode to their ray samples AS SPARK ROWS (O(W^3) of them), 4-corner
-    join, max-reduce. Exact same values as viewshed(); the row explosion
-    is the scale cliff the sector form removes."""
-    height = height if height is not None else width
-    # sid packs (pixel, step): 21-bit shift bounds the raster dimension
-    assert max(width, height) <= (1 << 21), "viewshed sid packing limit"
-    z0row = band.filter((F.col("gx") == ox) & (F.col("gy") == oy)).collect()
-    z_obs = float(z0row[0]["value"]) + obs_height
-
-    px = band.select("gx", "gy", F.col("value").alias("zp"))
-    # NB: Spark resolves column names case-insensitively by default, so
-    # the step count must NOT be named "K" next to a step column "k"
-    px = px.withColumn(
-        "n_steps", F.greatest(F.abs(F.col("gx") - ox), F.abs(F.col("gy") - oy))
-    )
-    # intermediate samples k = 1..n-1 (adjacent/observer pixels have none)
-    samples = (
-        px.filter(F.col("n_steps") >= 2)
-        .withColumn("k", F.explode(F.sequence(F.lit(1), F.col("n_steps") - 1)))
-        .withColumn("t", F.col("k").cast("double") / F.col("n_steps").cast("double"))
-        .withColumn("sx", F.lit(float(ox)) + (F.col("gx") - ox) * F.col("t") + F.lit(0.5))
-        .withColumn("sy", F.lit(float(oy)) + (F.col("gy") - oy) * F.col("t") + F.lit(0.5))
-        .withColumn(
-            "sid",
-            F.shiftleft(F.col("gy") * width + F.col("gx"), 21) + F.col("k"),
-        )
-    )
-    sampled = sample_bilinear(
-        band, samples.select("sid", F.col("sx").alias("px"), F.col("sy").alias("py")),
-        width=width, height=height, id_col="sid",
-    ).withColumnRenamed("value", "zs")
-    joined = samples.join(sampled, "sid").withColumn(
-        "slope_s", (F.col("zs") - F.lit(z_obs)) / F.col("t")
-    )
-    max_slope = joined.groupBy("gx", "gy").agg(F.max("slope_s").alias("max_s"))
-    out = (
-        px.join(max_slope, ["gx", "gy"], "left")
-        .withColumn("slope_p", F.col("zp") - F.lit(z_obs))
-        .select(
-            "gx", "gy",
-            (F.col("max_s").isNull() | (F.col("max_s") < F.col("slope_p")))
-            .alias("visible"),
-        )
-    )
-    return out
-
-
 def cubic_weight_sql(t_expr: str, tap: int) -> str:
     """Cubic-convolution weight (a = -0.5, the GDALResampleAlg cubic
     kernel, alg/gdalresamplingkernels.h CubicKernel) for tap offset
@@ -794,53 +609,6 @@ def cubicspline_weight_sql(t_expr: str, tap: int) -> str:
                 f"+ 4.0) / 6.0)")
     # 1 < |d| < 2: (2 - d)^3 / 6
     return (f"(((2.0 - ({d})) * (2.0 - ({d})) * (2.0 - ({d}))) / 6.0)")
-
-
-def sample_cubic(band: DataFrame, points: DataFrame, *, width: int, height: int,
-                 x_col: str = "px", y_col: str = "py",
-                 id_col: str = "sid") -> DataFrame:
-    """Sample at fractional pixel coords by 4x4 cubic convolution
-    (gcore/gdal_interpolateatpoint.cpp cubic path; kernel weights from
-    alg/gdalresamplingkernels.h, a=-0.5). Taps clamp to the grid (edge
-    replication). 16 shifted equi-joins gather the taps; the weighted
-    sum is a fixed-order column expression. Returns (sid, value)."""
-    xs = F.least(F.greatest(F.col(x_col), F.lit(0.5)), F.lit(width - 0.5))
-    ys = F.least(F.greatest(F.col(y_col), F.lit(0.5)), F.lit(height - 0.5))
-    p = points.select(
-        F.col(id_col), (xs - 0.5).alias("_fx"), (ys - 0.5).alias("_fy")
-    ).select(
-        id_col, "_fx", "_fy",
-        F.least(F.floor("_fx"), F.lit(width - 2)).cast("bigint").alias("_x0"),
-        F.least(F.floor("_fy"), F.lit(height - 2)).cast("bigint").alias("_y0"),
-    ).select(
-        id_col, "_x0", "_y0",
-        (F.col("_fx") - F.col("_x0")).alias("_tx"),
-        (F.col("_fy") - F.col("_y0")).alias("_ty"),
-    )
-    b = band.select("gx", "gy", "value")
-    out = p
-    for i in (-1, 0, 1, 2):        # tap column offset
-        for j in (-1, 0, 1, 2):    # tap row offset
-            name = f"_v_{i}_{j}".replace("-", "m")
-            # clamped tap coordinates (edge replication)
-            txp = F.least(F.greatest(F.col("_x0") + i, F.lit(0)), F.lit(width - 1))
-            typ = F.least(F.greatest(F.col("_y0") + j, F.lit(0)), F.lit(height - 1))
-            out = out.withColumn("_qx", txp).withColumn("_qy", typ).join(
-                b.select(F.col("gx").alias("_qx"), F.col("gy").alias("_qy"),
-                         F.col("value").alias(name)),
-                ["_qx", "_qy"],
-            ).drop("_qx", "_qy")
-    # fixed-order weighted sum: rows first, then columns
-    row_terms = []
-    for j in (-1, 0, 1, 2):
-        terms = []
-        for i in (-1, 0, 1, 2):
-            name = f"_v_{i}_{j}".replace("-", "m")
-            terms.append(f"(CAST({name} AS DOUBLE) * {cubic_weight_sql('_tx', i)})")
-        row = "(((" + terms[0] + " + " + terms[1] + ") + " + terms[2] + ") + " + terms[3] + ")"
-        row_terms.append(f"({row} * {cubic_weight_sql('_ty', j)})")
-    total = "(((" + row_terms[0] + " + " + row_terms[1] + ") + " + row_terms[2] + ") + " + row_terms[3] + ")"
-    return out.select(id_col, F.expr(total).alias("value"))
 
 
 LANCZOS_A = 3  # GDAL's lanczos radius (alg/gdalresamplingkernels.h)

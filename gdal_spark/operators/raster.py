@@ -751,6 +751,9 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
                 # union by min so the root is the canonical min label
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
+        # the mapping below is built on the driver: the returned plan
+        # never reads `edges` again
+        edges.unpersist()
         rows = [(k, find(k)) for k in list(parent.keys())]
         spark = pixels.sparkSession
         if rows:

@@ -162,21 +162,6 @@ def rpc_inverse(rpc: RPC, pixel, line, height=0.0,
 
 # ------------------------------------------------------ Spark operators
 
-def apply_rpc_forward(df: DataFrame, rpc: RPC, lon: str = "lon",
-                      lat: str = "lat", height: float = 0.0) -> DataFrame:
-    """Adds (pixel, line). Arrow-batched; the RPC constants ride the
-    closure (40 floats), each point ships 16 bytes."""
-
-    @F.pandas_udf("struct<pixel:double, line:double>")
-    def _fwd(lon_s: pd.Series, lat_s: pd.Series) -> pd.DataFrame:
-        p, l = rpc_forward(rpc, lon_s.to_numpy(), lat_s.to_numpy(), height)
-        return pd.DataFrame({"pixel": p, "line": l})
-
-    res = df.withColumn("_pl", _fwd(F.col(lon), F.col(lat)))
-    return res.withColumn("pixel", F.col("_pl.pixel")).withColumn(
-        "line", F.col("_pl.line")).drop("_pl")
-
-
 def apply_rpc_inverse(df: DataFrame, rpc: RPC, pixel: str = "pixel",
                       line: str = "line", height: float = 0.0,
                       pix_err_threshold: float = DEFAULT_PIX_ERR_THRESHOLD,

@@ -22,7 +22,7 @@ raster bytes for T=256, h=1 — not 9x.
 
 Boundary conventions (both used by the reference family):
 - 'center': an out-of-raster neighbor contributes the CENTER pixel's
-  value (the gdaldem edge convention the per-pixel operators pin).
+  value (the gdaldem edge convention of the 3x3 terrain ops).
 - 'clamp': out-of-raster taps clamp to the nearest valid pixel
   (the resampling-kernel convention, gcore/gdal_interpolateatpoint).
 """
@@ -206,8 +206,7 @@ def halo_apply(
 
 def neighbors_3x3(padded: np.ndarray):
     """center + nb(dx, dy) accessor with the gdaldem 'center' edge
-    convention (NaN halo -> center value), matching the per-pixel
-    _halo_join semantics bit-for-bit."""
+    convention (NaN halo -> center value)."""
     c = padded[1:-1, 1:-1]
 
     def nb(dx: int, dy: int) -> np.ndarray:
@@ -225,7 +224,7 @@ _DEG = 180.0 / 3.141592653589793
 
 def _horn(nb, cellsize: float = 1.0):
     """Horn gradients — the IDENTICAL left-assoc op sequence as the
-    per-pixel column expressions (focal.slope_horn), so results are
+    DuckDB oracle (queries._horn_grad_sql), so the +-*/ chain is
     bit-equal."""
     dzdx = ((nb(1, -1) + 2 * nb(1, 0) + nb(1, 1))
             - (nb(-1, -1) + 2 * nb(-1, 0) + nb(-1, 1))) / (8.0 * cellsize)
@@ -435,9 +434,9 @@ def sample_cubic_tiles(tiled: DataFrame, points: DataFrame, *,
                        tile: int, width: int, height: int,
                        x_col: str = "px", y_col: str = "py",
                        id_col: str = "sid", kernel: str = "cubic") -> DataFrame:
-    """4x4 kernel sampling on the tile model — replaces the per-pixel
-    path's 16 shifted equi-joins with one halo-2 assembly + one point
-    shuffle; weight and fold order match the SQL oracle exactly.
+    """4x4 kernel sampling on the tile model — one halo-2 assembly +
+    one point shuffle instead of 16 shifted per-pixel equi-joins;
+    weight and fold order match the SQL oracle exactly.
     kernel='cubic': cubic convolution a = -0.5
     (alg/gdalresamplingkernels.h CubicKernel); kernel='cubicspline':
     the GRA_CubicSpline B-spline basis (alg/gdalwarper.h:37-67,

@@ -4,7 +4,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from gdal_spark.operators import contour, focal
+from gdal_spark.operators import contour, tile_raster
 
 
 def _ramp_band(spark, w):
@@ -14,6 +14,31 @@ def _ramp_band(spark, w):
         (F.col("id") / w).cast("bigint").alias("gy"),
         (F.col("id") % w).alias("value"),
     )
+
+
+def _terrain(band, w, t):
+    """terrain_tiles over a w x w band in t x t tiles -> {(gx, gy): row}."""
+    tiles = tile_raster.tiles_from_pixels(band, tile=t)
+    out = tile_raster.terrain_tiles(tiles, tile=t, nty=w // t, ntx=w // t)
+    rows = out.select(
+        "ty", "tx",
+        F.posexplode(F.arrays_zip("tpi", "tri", "roughness")).alias("_pos", "_m"),
+    ).select(
+        (F.col("tx") * t + F.col("_pos") % t).alias("gx"),
+        (F.col("ty") * t + (F.col("_pos") / t).cast("bigint")).alias("gy"),
+        "_m.tpi", "_m.tri", "_m.roughness",
+    ).collect()
+    assert len(rows) == w * w
+    return {(r["gx"], r["gy"]): r for r in rows}
+
+
+def _aspect(band, w, t):
+    """aspect_tiles over a w x w band in t x t tiles -> {(gx, gy): deg}."""
+    tiles = tile_raster.tiles_from_pixels(band, tile=t)
+    out = tile_raster.aspect_tiles(tiles, tile=t, nty=w // t, ntx=w // t)
+    px = tile_raster.pixels_from_tiles(out, tile=t, col="aspect_deg",
+                                       out="aspect_deg")
+    return {(r["gx"], r["gy"]): r["aspect_deg"] for r in px.collect()}
 
 
 def test_contour_on_linear_ramp(spark):
@@ -50,17 +75,17 @@ def test_terrain_metrics_flat_and_step(spark):
         (F.col("id") % w).alias("gx"), (F.col("id") / w).cast("bigint").alias("gy"),
         F.lit(7).alias("value"),
     )
-    out = focal.terrain_metrics(flat).toPandas()
-    assert (out["tpi"] == 0.0).all()
-    assert (out["tri"] == 0.0).all()
-    assert (out["roughness"] == 0).all()
+    out = _terrain(flat, w, 3).values()  # 2x2 tiles of 3
+    assert all(r["tpi"] == 0.0 for r in out)
+    assert all(r["tri"] == 0.0 for r in out)
+    assert all(r["roughness"] == 0 for r in out)
 
 
 def test_terrain_metrics_single_spike(spark):
     w = 5
     rows = [(x, y, 80 if (x, y) == (2, 2) else 0) for y in range(w) for x in range(w)]
     band = spark.createDataFrame(rows, "gx bigint, gy bigint, value bigint")
-    out = {(r["gx"], r["gy"]): r for r in focal.terrain_metrics(band).collect()}
+    out = _terrain(band, w, 5)
     c = out[(2, 2)]
     assert c["tpi"] == 80.0          # center minus mean(0)
     assert c["tri"] == 80.0          # all |80-0|
@@ -76,14 +101,14 @@ def test_aspect_cardinal_directions(spark):
     w = 6
     # plane rising to the east: value = gx -> downslope faces WEST (270)
     band = _ramp_band(spark, w)
-    out = {(r["gx"], r["gy"]): r["aspect_deg"] for r in focal.aspect(band).collect()}
+    out = _aspect(band, w, 3)  # 2x2 tiles of 3: (3, 3) sits on a tile corner
     assert abs(out[(3, 3)] - 270.0) < 1e-9
     # plane rising to the north (value = -gy => rising as gy decreases):
     band2 = spark.range(w * w).select(
         (F.col("id") % w).alias("gx"), (F.col("id") / w).cast("bigint").alias("gy"),
         (F.col("id") / w).cast("bigint").alias("value"),
     )
-    out2 = {(r["gx"], r["gy"]): r["aspect_deg"] for r in focal.aspect(band2).collect()}
+    out2 = _aspect(band2, w, 3)
     # value grows with gy (southward in screen coords == increasing y);
     # dz/dy > 0 -> downslope toward -y: aspect = north = 0
     assert abs(out2[(3, 3)] - 0.0) < 1e-9 or abs(out2[(3, 3)] - 360.0) < 1e-9

@@ -19,7 +19,7 @@ import __spark_entry__ as E  # noqa: E402
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 SUBSET = ["tile_assign_suite", "spatial_join", "spatial_join_bigring",
           "ogr_summary", "text_suite", "similarity_topk",
-          "warp_kernels_suite", "terrain_suite"]
+          "warp_kernels_suite", "terrain_suite", "polygonize"]
 
 
 @pytest.fixture(scope="module")

@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from gdal_spark.operators import focal, raster, tiling
+from gdal_spark.operators import focal, raster, tile_raster, tiling
 
 
 def _band_img(spark, zoom, tile_px):
@@ -15,38 +15,18 @@ def _band_img(spark, zoom, tile_px):
     return band, pdf["value"].to_numpy().reshape(w, w), w
 
 
-def test_slope_matches_numpy_stencil(spark):
-    band, img, w = _band_img(spark, 2, 8)
-    # numpy oracle with edge replication
-    pad = np.pad(img.astype(np.float64), 1, mode="edge")
-    # interior uses real neighbors; edges replicate the CENTER value
-    # (focal._halo_join semantics), so recompute edges accordingly
-    out = focal.slope_horn(band).orderBy("gy", "gx").toPandas()
-    got = out["slope_deg"].to_numpy().reshape(w, w)
-
-    def v(dx, dy, x, y):
-        nx, ny = x + dx, y + dy
-        if 0 <= nx < w and 0 <= ny < w:
-            return float(img[ny, nx])
-        return float(img[y, x])
-
-    for y in (0, 5, w - 1):
-        for x in (0, 17, w - 1):
-            dzdx = ((v(1, -1, x, y) + 2 * v(1, 0, x, y) + v(1, 1, x, y))
-                    - (v(-1, -1, x, y) + 2 * v(-1, 0, x, y) + v(-1, 1, x, y))) / 8.0
-            dzdy = ((v(-1, 1, x, y) + 2 * v(0, 1, x, y) + v(1, 1, x, y))
-                    - (v(-1, -1, x, y) + 2 * v(0, -1, x, y) + v(1, -1, x, y))) / 8.0
-            expect = np.degrees(np.arctan(np.hypot(dzdx, dzdy)))
-            assert abs(got[y, x] - expect) < 1e-9, (x, y)
-
-
 def test_hillshade_range_and_flat_surface(spark):
     flat = spark.range(16 * 16).select(
         (F.col("id") % 16).alias("gx"),
         (F.col("id") / 16).cast("bigint").alias("gy"),
         F.lit(100).alias("value"),
     )
-    out = focal.hillshade(flat, altitude_deg=45.0).toPandas()
+    tiles = tile_raster.tiles_from_pixels(flat, tile=8)
+    out = tile_raster.pixels_from_tiles(
+        tile_raster.hillshade_tiles(tiles, tile=8, nty=2, ntx=2, altitude_deg=45.0),
+        tile=8, col="shade", out="shade",
+    ).toPandas()
+    assert len(out) == 16 * 16
     # flat surface: shade = 255*sin(alt) everywhere
     expect = 255.0 * np.sin(np.radians(45.0))
     assert np.allclose(out["shade"], expect, atol=1e-9)

@@ -322,3 +322,19 @@ def test_label_pixels_random_raster_matches_bruteforce(spark):
         assert len(got) == W * H
         for r in got.itertuples():
             assert exp[int(r.pid)] == int(r.comp), (connect, tile, r)
+
+
+def test_label_pixels_leaves_no_persisted_rdds(spark):
+    """The cross-tile edge table is cached only while the driver
+    union-find reads it; the returned plan holds no cached RDD. The
+    raster is one no other test builds: Spark matches equal cached
+    plans across calls, so a shared one could hide a leak."""
+    from gdal_spark.operators import raster
+
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    px = raster.synth_raster(spark, 72, 40, block=10, n_values=3)
+    lab = raster.label_pixels(px, width=72, tile=16, materialize=False)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    # 10-px blocks of 3 values: each block is one component
+    assert lab.select("comp").distinct().count() == (72 // 10 + 1) * (40 // 10)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

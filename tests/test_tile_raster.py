@@ -1,19 +1,76 @@
-"""Tile-array raster model: conversions, halo exchange, stencil parity.
+"""Tile-array raster model: conversions, halo exchange, and the 3x3
+stencils checked cell by cell against per-pixel numpy references.
 
-The critical property: tile-model operators are BIT-IDENTICAL to the
-per-pixel halo-join operators (same IEEE op sequence), so swapping the
-representation cannot move any correctness result.
+The references read each neighbour with the gdaldem 'center' edge rule
+(an out-of-raster neighbour is the centre pixel) and fold in the same
+order as the tile kernels, so the +-*/ chain is bit-identical; only
+atan/sqrt may differ by an ulp (the references take hypot).
 """
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from gdal_spark.operators import focal, raster, tile_raster
+from gdal_spark.operators import raster, tile_raster
 
 
 @pytest.fixture(scope="module")
 def band(spark):
     return raster.synth_band(spark, zoom=2, tile_px=8)  # 32x32, 4x4 tiles
+
+
+def _img(band, w, h):
+    pdf = band.select("gx", "gy", "value").orderBy("gy", "gx").toPandas()
+    return pdf["value"].to_numpy().astype(np.float64).reshape(h, w)
+
+
+def _nbr(img):
+    """v(dx, dy, x, y): the (x+dx, y+dy) value; off the raster, the
+    centre value (the gdaldem 'center' edge rule)."""
+    h, w = img.shape
+
+    def v(dx, dy, x, y):
+        nx, ny = x + dx, y + dy
+        if 0 <= nx < w and 0 <= ny < h:
+            return float(img[ny, nx])
+        return float(img[y, x])
+
+    return v
+
+
+def _slope_ref(img):
+    """Horn slope in degrees, one pixel at a time."""
+    v = _nbr(img)
+    out = np.empty(img.shape)
+    for y in range(img.shape[0]):
+        for x in range(img.shape[1]):
+            dzdx = ((v(1, -1, x, y) + 2 * v(1, 0, x, y) + v(1, 1, x, y))
+                    - (v(-1, -1, x, y) + 2 * v(-1, 0, x, y) + v(-1, 1, x, y))) / 8.0
+            dzdy = ((v(-1, 1, x, y) + 2 * v(0, 1, x, y) + v(1, 1, x, y))
+                    - (v(-1, -1, x, y) + 2 * v(0, -1, x, y) + v(1, -1, x, y))) / 8.0
+            out[y, x] = np.degrees(np.arctan(np.hypot(dzdx, dzdy)))
+    return out
+
+
+def _terrain_ref(img):
+    """(tpi, tri, roughness) arrays, one pixel at a time: tpi = centre
+    - mean(8 neighbours), tri = mean |centre - neighbour|, roughness =
+    max - min of the 9-cell window; neighbours in row-major order."""
+    v = _nbr(img)
+    offs = [(dx, dy) for dy in (-1, 0, 1) for dx in (-1, 0, 1) if (dx, dy) != (0, 0)]
+    tpi, tri, rough = (np.empty(img.shape) for _ in range(3))
+    for y in range(img.shape[0]):
+        for x in range(img.shape[1]):
+            c = float(img[y, x])
+            nbrs = [v(dx, dy, x, y) for dx, dy in offs]
+            s = 0.0
+            absdev = 0.0
+            for n in nbrs:
+                s += n
+                absdev += abs(c - n)
+            tpi[y, x] = c - s / 8.0
+            tri[y, x] = absdev / 8.0
+            rough[y, x] = max(nbrs + [c]) - min(nbrs + [c])
+    return tpi, tri, rough
 
 
 def test_pixel_tile_roundtrip(spark, band):
@@ -26,24 +83,28 @@ def test_pixel_tile_roundtrip(spark, band):
     assert [r["value"] for r in a] == [r["value"] for r in b]
 
 
-def test_slope_matches_per_pixel_model(spark, band):
-    """Tile-stencil slope == halo-join slope. The +-*/ chain is
-    bit-identical; atan/sqrt go through different libms (numpy vs JVM),
-    so equality is to ~1 ulp — far below the query contract's 6dp."""
-    ref = focal.slope_horn(band, cellsize=1.0, z_factor=1.0) \
-        .orderBy("gy", "gx").collect()
-    tiles = tile_raster.tiles_from_pixels(band, tile=8)
-    got = tile_raster.pixels_from_tiles(
-        tile_raster.slope_tiles(tiles, tile=8, nty=4, ntx=4),
-        tile=8, col="slope_deg", out="slope_deg",
-    ).orderBy("gy", "gx").collect()
-    a = np.array([r["slope_deg"] for r in ref])
-    b = np.array([r["slope_deg"] for r in got])
-    assert np.abs(a - b).max() < 1e-12
+def test_slope_matches_numpy_stencil(spark, band):
+    """Tile-stencil slope == a per-pixel numpy Horn stencil on every
+    cell: the 32x32 band (4x4 tiles of 8) and a 24x16 band (ntx=3,
+    nty=2, so the tile grid is not square). Equal to ~1 ulp of atan/
+    sqrt, far below the query contract's 6dp."""
+    rng = np.random.default_rng(11)
+    img24 = rng.integers(0, 1000, (16, 24))
+    band24 = spark.createDataFrame(
+        [(x, y, int(img24[y, x])) for y in range(16) for x in range(24)],
+        "gx bigint, gy bigint, value bigint")
+    for b, w, h in ((band, 32, 32), (band24, 24, 16)):
+        tiles = tile_raster.tiles_from_pixels(b, tile=8)
+        got = tile_raster.pixels_from_tiles(
+            tile_raster.slope_tiles(tiles, tile=8, nty=h // 8, ntx=w // 8),
+            tile=8, col="slope_deg", out="slope_deg",
+        ).orderBy("gy", "gx").toPandas()["slope_deg"].to_numpy()
+        assert got.shape == (w * h,)
+        assert np.abs(got.reshape(h, w) - _slope_ref(_img(b, w, h))).max() < 1e-12, (w, h)
 
 
-def test_terrain_matches_per_pixel_model(spark, band):
-    ref = focal.terrain_metrics(band).orderBy("gy", "gx").collect()
+def test_terrain_matches_numpy_reference(spark, band):
+    tpi, tri, rough = _terrain_ref(_img(band, 32, 32))
     tiles = tile_raster.tiles_from_pixels(band, tile=8)
     out = tile_raster.terrain_tiles(tiles, tile=8, nty=4, ntx=4)
     z = out.select(
@@ -55,9 +116,11 @@ def test_terrain_matches_per_pixel_model(spark, band):
         F.col("_m.tpi").alias("tpi"), F.col("_m.tri").alias("tri"),
         F.col("_m.roughness").cast("bigint").alias("roughness"),
     ).orderBy("gy", "gx").collect()
-    for a, b in zip(ref, z):
-        assert a["tpi"] == b["tpi"] and a["tri"] == b["tri"] \
-            and a["roughness"] == b["roughness"]
+    assert len(z) == 32 * 32
+    for b in z:
+        y, x = b["gy"], b["gx"]
+        assert tpi[y, x] == b["tpi"] and tri[y, x] == b["tri"] \
+            and rough[y, x] == b["roughness"]
 
 
 def test_halo_assembly_clamp(spark):
