@@ -15,6 +15,32 @@ def _band_img(spark, zoom, tile_px):
     return band, pdf["value"].to_numpy().reshape(w, w), w
 
 
+def test_slope_matches_numpy_stencil(spark):
+    band, img, w = _band_img(spark, 2, 8)
+    # out-of-raster neighbours take the CENTER value (gdaldem 'center')
+    tiles = tile_raster.tiles_from_pixels(band, tile=8)
+    out = tile_raster.pixels_from_tiles(
+        tile_raster.slope_tiles(tiles, tile=8, nty=w // 8, ntx=w // 8),
+        tile=8, col="slope_deg", out="slope_deg",
+    ).orderBy("gy", "gx").toPandas()
+    got = out["slope_deg"].to_numpy().reshape(w, w)
+
+    def v(dx, dy, x, y):
+        nx, ny = x + dx, y + dy
+        if 0 <= nx < w and 0 <= ny < w:
+            return float(img[ny, nx])
+        return float(img[y, x])
+
+    for y in (0, 5, w - 1):
+        for x in (0, 17, w - 1):
+            dzdx = ((v(1, -1, x, y) + 2 * v(1, 0, x, y) + v(1, 1, x, y))
+                    - (v(-1, -1, x, y) + 2 * v(-1, 0, x, y) + v(-1, 1, x, y))) / 8.0
+            dzdy = ((v(-1, 1, x, y) + 2 * v(0, 1, x, y) + v(1, 1, x, y))
+                    - (v(-1, -1, x, y) + 2 * v(0, -1, x, y) + v(1, -1, x, y))) / 8.0
+            expect = np.degrees(np.arctan(np.hypot(dzdx, dzdy)))
+            assert abs(got[y, x] - expect) < 1e-9, (x, y)
+
+
 def test_hillshade_range_and_flat_surface(spark):
     flat = spark.range(16 * 16).select(
         (F.col("id") % 16).alias("gx"),

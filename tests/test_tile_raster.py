@@ -83,8 +83,8 @@ def test_pixel_tile_roundtrip(spark, band):
     assert [r["value"] for r in a] == [r["value"] for r in b]
 
 
-def test_slope_matches_numpy_stencil(spark, band):
-    """Tile-stencil slope == a per-pixel numpy Horn stencil on every
+def test_slope_matches_per_pixel_model(spark, band):
+    """Tile-stencil slope == a per-pixel numpy Horn model on every
     cell: the 32x32 band (4x4 tiles of 8) and a 24x16 band (ntx=3,
     nty=2, so the tile grid is not square). Equal to ~1 ulp of atan/
     sqrt, far below the query contract's 6dp."""
