@@ -19,11 +19,18 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gdal_spark import cache
+from gdal_spark.operators import tiling
+from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
+from gdal_spark.sources import docs, polygons
+
+CACHE = os.environ.get("SPARK_GRAFT_BENCH_CACHE",
+                       os.path.join(os.path.dirname(__file__), ".bench_cache"))
 
 
 def force(df: DataFrame) -> int:
@@ -35,6 +42,52 @@ def force(df: DataFrame) -> int:
     return int(row["n"] or 0)
 
 
+def doc_path(spark) -> str:
+    """The synthesized interleaved-doc table, materialized ONCE to
+    parquet (stand-in for the production Iceberg table) so the bench
+    measures the engine pipeline (scan -> join -> tile -> reduce), not
+    input-string generation."""
+    n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
+    p = os.path.join(CACHE, f"docs_{n_docs}.parquet")
+    if not os.path.exists(p):
+        docs.synth_docs(spark, n_docs, partitions=64).write.mode("overwrite").parquet(p)
+    return p
+
+
+def headline(spark, sf_dir) -> DataFrame:
+    """The north-star plan: spatial join + tile assignment over the doc
+    table, spans carried through to the sink (hashed in the reduce —
+    span-sequence cost is real). The exact stage is the default
+    broadcast arm's band table (column arithmetic fused into the hash
+    join, no Python)."""
+    cov = polygons.countries64_cover(spark, res=6)
+    joined = spatial_join_points_in_polygons(
+        spark.read.parquet(doc_path(spark)), cov, res=6,
+        keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
+    )
+    tiled = tiling.assign_tiles(joined, zoom=12)
+    return tiled.select("doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
+
+
+def bigpoly(strategy):
+    """4096-vertex rings (VERDICT r2: the 64-vertex cover can't see
+    ring-transfer amplification). 'broadcast' rides the broadcast-dict
+    PIP (8 bytes/candidate into Arrow); 'shuffle' (r4) is the grouped
+    cogroup form — rings ship once per (cell, poly_id) group, the
+    no-broadcast scale path."""
+    def run(spark, sf_dir):
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        dense = polygons.countries64_dense_cover(spark, res=6, nv=4096)
+        # repartition: a bare limit() collapses the no-shuffle
+        # broadcast path to one task, which would bench task-count,
+        # not ring transfer
+        pts = spark.read.parquet(doc_path(spark)).limit(100_000).repartition(cpus)
+        return spatial_join_points_in_polygons(
+            pts, dense, res=6, strategy=strategy, keep_point_cols=["doc_id"]
+        )
+    return run
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -42,24 +95,12 @@ def main() -> None:
     os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
     from gdal_spark import queries as Q
-    from gdal_spark.operators import tiling
-    from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
     from gdal_spark.session import get_spark
-    from gdal_spark.sources import docs, polygons
 
     spark = get_spark("bench", master=f"local[{cpus}]")
 
     timings: dict[str, float] = {}
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
-
-    # -- input: synthesized interleaved-doc table, materialized ONCE to
-    # parquet (stand-in for the production Iceberg table) so the bench
-    # measures the engine pipeline (scan -> join -> tile -> reduce),
-    # not input-string generation.
-    cache = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/root/repo/.bench_cache")
-    doc_path = os.path.join(cache, f"docs_{n_docs}.parquet")
-    if not os.path.exists(doc_path):
-        docs.synth_docs(spark, n_docs, partitions=64).write.mode("overwrite").parquet(doc_path)
 
     # -- warmup: JVM codegen + Arrow + the Python-UDF worker POOL.
     # The repartition matters: a single-partition warmup boots one
@@ -68,16 +109,14 @@ def main() -> None:
     # seconds of noise at local[32]).
     force(Q.q_tile_assign(spark, sf_dir).limit(1000))
     cov = polygons.countries64_cover(spark, res=6)
-    warm = spark.read.parquet(doc_path).limit(200_000).repartition(cpus)
+    warm = spark.read.parquet(doc_path(spark)).limit(200_000).repartition(cpus)
     force(
         spatial_join_points_in_polygons(warm, cov, res=6, keep_point_cols=["doc_id"])
     )
 
-    # -- headline: spatial join + tile assignment, spans carried through
-    # to the sink (hashed in the reduce — span-sequence cost is real).
-    # Best of N runs (steal-noise on the shared sandbox host).
+    # -- headline: best of N runs (steal-noise on the shared sandbox host).
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    headline = float("inf")
+    best = float("inf")
     for _ in range(reps):
         # pipeline CONSTRUCTION (incl. the polygon-ring broadcast
         # build, a driver-side constant per job) happens outside the
@@ -85,25 +124,17 @@ def main() -> None:
         # 10^12-row scale the per-job setup amortizes to zero — timing
         # it per-rep would just measure setup/compute ratio at the
         # bench's (much smaller) corpus size
-        # the exact stage is the default broadcast arm's band table
-        # (column arithmetic fused into the hash join, no Python)
-        d = spark.read.parquet(doc_path)
-        joined = spatial_join_points_in_polygons(
-            d, cov, res=6,
-            keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
-        )
-        tiled = tiling.assign_tiles(joined, zoom=12)
-        sel = tiled.select("doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
+        sel = headline(spark, sf_dir)
         t0 = time.time()
         n_out = force(sel)
-        headline = min(headline, time.time() - t0)
-    timings["headline_join_tile"] = round(headline, 3)
+        best = min(best, time.time() - t0)
+    timings["headline_join_tile"] = round(best, 3)
 
     # -- per-operator timings over the sf tables
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "headline":
         out = {
             "metric": "spatial-join+tile-assignment docs/sec",
-            "value": round(n_docs / headline, 1),
+            "value": round(n_docs / best, 1),
             "unit": "docs/sec",
             "queries": timings,
             "sf": sf,
@@ -119,7 +150,7 @@ def main() -> None:
     # prefix filter had nothing to prune). Word rank is log-uniform
     # (= Zipf s=1) over a 10k vocab, deterministic from (doc, pos).
     n_zipf = int(os.environ.get("SPARK_GRAFT_BENCH_ZIPF_DOCS", "20000"))
-    zipf_path = os.path.join(cache, f"zipf_{n_zipf}.parquet")
+    zipf_path = os.path.join(CACHE, f"zipf_{n_zipf}.parquet")
     if not os.path.exists(zipf_path):
         from gdal_spark.sources.derive import A, M31
         ln_v = 9.2103403719761836  # ln(10000)
@@ -152,7 +183,7 @@ def main() -> None:
         # (autotest/benchmark/test_ogr2ogr.py:61-66: 32631 <-> 4326)
         # over the full synthesized doc table — batch Krueger UDF both
         # directions
-        pts = s.read.parquet(doc_path).select("doc_id", "lon", "lat")
+        pts = s.read.parquet(doc_path(s)).select("doc_id", "lon", "lat")
         fwd = reproj_ops.utm_forward_cols(pts, zone=31)
         return reproj_ops.utm_inverse_cols(fwd, zone=31).select(
             "doc_id", "easting", "northing", "lon_inv", "lat_inv"
@@ -185,27 +216,10 @@ def main() -> None:
         out = tile_raster.slope_tiles(tiles, tile=128, nty=8, ntx=8)
         return out.select("ty", "tx", F.xxhash64("slope_deg").alias("h"))
 
-    def bench_bigpoly(strategy):
-        # 4096-vertex rings (VERDICT r2: the 64-vertex cover can't see
-        # ring-transfer amplification). 'broadcast' rides the
-        # broadcast-dict PIP (8 bytes/candidate into Arrow);
-        # 'shuffle' (r4) is the grouped cogroup form — rings ship once
-        # per (cell, poly_id) group, the no-broadcast scale path.
-        def run(s, d):
-            dense = polygons.countries64_dense_cover(s, res=6, nv=4096)
-            # repartition: a bare limit() collapses the no-shuffle
-            # broadcast path to one task, which would bench task-count,
-            # not ring transfer
-            pts = s.read.parquet(doc_path).limit(100_000).repartition(cpus)
-            return spatial_join_points_in_polygons(
-                pts, dense, res=6, strategy=strategy, keep_point_cols=["doc_id"]
-            )
-        return run
-
     per_query = {
         "tile_assign": Q.q_tile_assign,
-        "spatial_join_bigpoly": bench_bigpoly("broadcast"),
-        "spatial_join_bigpoly_grouped": bench_bigpoly("shuffle"),
+        "spatial_join_bigpoly": bigpoly("broadcast"),
+        "spatial_join_bigpoly_grouped": bigpoly("shuffle"),
         "pyramid_counts": Q.q_pyramid_counts,
         "spatial_join": Q.q_spatial_join,
         "spatial_join_wkb": Q.q_spatial_join_wkb,
@@ -246,7 +260,8 @@ def main() -> None:
         per_query["viewshed_1k"] = bench_viewshed(1024)
     for name, fn in per_query.items():
         t = time.time()
-        force(fn(spark, sf_dir))
+        with cache.scope():  # no later entry reads this one's tables
+            force(fn(spark, sf_dir))
         timings[name] = round(time.time() - t, 3)
 
     total = round(sum(timings.values()), 3)
@@ -256,7 +271,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "docs_per_sec": round(n_docs / headline, 1),
+        "docs_per_sec": round(n_docs / best, 1),
         "bench_docs": n_docs,
         "joined_rows": n_out,
         "cpus": cpus,

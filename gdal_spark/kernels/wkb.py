@@ -31,10 +31,6 @@ _LE = 1
 
 # ------------------------------------------------------------------ encode
 
-def encode_point(x: float, y: float) -> bytes:
-    return struct.pack("<BIdd", _LE, POINT, x, y)
-
-
 def encode_points(xs, ys) -> list[bytes]:
     """Vectorized batch point encode: one (n, 21)-byte buffer built with
     numpy, split per row."""
@@ -48,11 +44,6 @@ def encode_points(xs, ys) -> list[bytes]:
     buf[:, 13:21] = ys.view(np.uint8).reshape(n, 8)
     raw = buf.tobytes()
     return [raw[i * 21:(i + 1) * 21] for i in range(n)]
-
-
-def encode_linestring(xy: np.ndarray) -> bytes:
-    xy = np.asarray(xy, dtype=np.float64)
-    return struct.pack("<BII", _LE, LINESTRING, xy.shape[0]) + xy.tobytes()
 
 
 def encode_polygon(rings: list[np.ndarray]) -> bytes:

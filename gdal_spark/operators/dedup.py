@@ -17,18 +17,20 @@ designed Spark-first:
 
 All integer math: no float anywhere, so every result is exact.
 
-Operational note on materialize=True (the default here and in
-similarity.ivf_dedup_pairs): the per-query index tables persist()
-into executor MEMORY_AND_DISK and stay registered in Spark's
-CacheManager until clearCache()/unpersist — identical re-invocations
-reuse them (a feature), but a long-lived session cycling MANY distinct
-large corpora should either pass materialize=False or call
-spark.catalog.clearCache() between corpora to release the storage.
+Operational note on the persisted index tables (here and in
+similarity.ivf_dedup_pairs): each call persist()s its shared subtrees
+into executor MEMORY_AND_DISK and, outside a `cache.scope()`, they stay
+in Spark's CacheManager — identical re-invocations reuse them (a
+feature), but a long-lived session cycling MANY distinct large corpora
+should run each call and its action inside `with cache.scope():`,
+which releases exactly those tables (clearCache() evicts everyone's).
 """
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .. import cache
 
 M31 = 2147483648  # 2^31
 LSH_PRIME = 2147483647  # 2^31 - 1 (Mersenne)
@@ -71,7 +73,6 @@ def ngram_jaccard_pairs(
     text: str = "text",
     n: int = 2,
     threshold_pct: int = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by Jaccard over the SET of word n-grams.
 
@@ -90,10 +91,10 @@ def ngram_jaccard_pairs(
     size; hot grams are naturally deprioritized because frequent grams
     sort LAST and rarely make a prefix.
 
-    materialize=True (the scale default) persists the two shared
-    subtrees — the per-doc gram-set table and the ranked prefix
-    index — so the self-join and the verification joins reuse ONE
-    evaluation each instead of re-deriving the text scan per branch
+    The two shared subtrees are persisted — the per-doc gram-set
+    table and the ranked prefix index — so the self-join and the
+    verification joins reuse ONE evaluation each instead of
+    re-deriving the text scan per branch
     (a self-join's two sides never hit ReusedExchange: their
     projections differ). Standard index-materialization for AllPairs;
     storage is MEMORY_AND_DISK on executors, O(corpus gram sets),
@@ -139,8 +140,7 @@ def ngram_jaccard_pairs(
             F.array_distinct(F.flatten(F.collect_list("gs")))).alias("gs"))
         .withColumn("ng", F.size("gs").cast("bigint"))
     )
-    if materialize:
-        docsets = docsets.persist()
+    docsets = cache.persist(docsets)
     grams = docsets.select("_id", "ng", F.explode("gs").alias("gram"))
     df_counts = grams.groupBy("gram").agg(F.count("*").alias("gdf"))
     ranked = grams.join(df_counts, "gram").withColumn(
@@ -156,8 +156,7 @@ def ngram_jaccard_pairs(
     pre = ranked.filter(
         F.col("_rk") <= F.col("ng") - F.ceil(F.col("ng") * t / 100.0) + 1
     ).select("_id", "gram", "_rk", "ng")
-    if materialize:
-        pre = pre.persist()
+    pre = cache.persist(pre)
     a = pre.select(F.col("_id").alias("id_a"), "gram",
                    F.col("ng").alias("na_"), F.col("_rk").alias("rka"))
     b = pre.select(F.col("_id").alias("id_b"), "gram",
@@ -248,16 +247,15 @@ def minhash_signatures(
 
 def minhash_lsh_pairs(
     df: DataFrame, *, id_col: str = "doc_id", text: str = "text",
-    n_hashes: int = 16, bands: int = 4, materialize: bool = True,
+    n_hashes: int = 16, bands: int = 4,
 ) -> DataFrame:
     """Banded LSH candidate pairs: signatures split into `bands` rows of
     n_hashes/bands; docs agreeing on any whole band pair up. Returns
     (id_a, id_b, n_bands_matched). The band-bucket join is an equi-join
     on (band_idx, band_values) — the scalable LSH shape.
 
-    materialize=True persists the banded-key table (MEMORY_AND_DISK,
-    lineage kept) so
-    the self-join's two sides reuse ONE signature pass (self-joins
+    The banded-key table is persisted (MEMORY_AND_DISK, lineage kept)
+    so the self-join's two sides reuse ONE signature pass (self-joins
     never hit ReusedExchange; without it the text scan + 16 array_min
     folds run twice)."""
     r = n_hashes // bands
@@ -278,8 +276,7 @@ def minhash_lsh_pairs(
             )
         ).alias("bk"),
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if materialize:
-        banded = banded.persist()
+    banded = cache.persist(banded)
     a = banded.select(F.col("id").alias("id_a"), "band", "key")
     b = banded.select(F.col("id").alias("id_b"), "band", "key")
     return (
@@ -311,17 +308,15 @@ def simhash64(df: DataFrame, *, id_col: str = "doc_id", text: str = "text",
 
 def simhash_near_pairs(df: DataFrame, *, id_col: str = "doc_id",
                        text: str = "text", max_hamming: int = 3,
-                       bits: int = 32, blocks: int = 4,
-                       materialize: bool = True) -> DataFrame:
+                       bits: int = 32, blocks: int = 4) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= max_hamming, found
     with the pigeonhole block trick (split fingerprint into blocks+?;
     any pair within distance max_hamming agrees on >= 1 block when
     blocks > max_hamming) — equi-join on (block_idx, block_bits).
 
-    materialize=True persists the blocked-fingerprint
-    table so the self-join's two sides reuse ONE fingerprint pass (the
-    per-bit vote fold is the expensive stage; self-joins never hit
-    ReusedExchange)."""
+    The blocked-fingerprint table is persisted so the self-join's two
+    sides reuse ONE fingerprint pass (the per-bit vote fold is the
+    expensive stage; self-joins never hit ReusedExchange)."""
     w = bits // blocks
     s = simhash64(df, id_col=id_col, text=text, bits=bits)
     blocked = s.select(
@@ -333,8 +328,7 @@ def simhash_near_pairs(df: DataFrame, *, id_col: str = "doc_id",
             )
         ).alias("bk"),
     ).select("id", "simhash", F.col("bk.blk").alias("blk"), F.col("bk.key").alias("key"))
-    if materialize:
-        blocked = blocked.persist()
+    blocked = cache.persist(blocked)
     a = blocked.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "blk", "key")
     b = blocked.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "blk", "key")
     pairs = (

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..sources import derive
 
 SALT_BAND = 201
@@ -450,8 +451,7 @@ def rasterize_inverse(polys: DataFrame, *, width: int, height: int,
 
 
 def sieve_filter(pixels: DataFrame, *, width: int, threshold: int,
-                 tile: int = 64, connect: int = 4,
-                 materialize: bool = True) -> DataFrame:
+                 tile: int = 64, connect: int = 4) -> DataFrame:
     """Sieve: merge raster polygons smaller than `threshold` pixels into
     their largest neighboring polygon (alg/gdalsievefilter.cpp;
     nConnectedness 4 or 8 applies to both component building and the
@@ -465,16 +465,14 @@ def sieve_filter(pixels: DataFrame, *, width: int, threshold: int,
     largest neighbor (ties -> smallest component label). Returns the
     sieved raster (px, py, value).
     """
-    lab = label_pixels(pixels, width=width, tile=tile, connect=connect,
-                       materialize=materialize)
+    lab = label_pixels(pixels, width=width, tile=tile, connect=connect)
     # materialize the labeled table once: sizes, both adjacency sides,
     # comp values and the final remap each re-evaluate `lab` otherwise
     # (6-8 full CCL re-runs; component adjacency can land anywhere, so
     # no border-band shortcut applies here). persist keeps lineage;
-    # entries stay in CacheManager until clearCache (see the dedup
-    # module docstring for the long-lived-session guidance).
-    if materialize:
-        lab = lab.persist()
+    # outside a `cache.scope()` the entry stays in CacheManager (see
+    # the dedup module docstring for the long-lived-session guidance).
+    lab = cache.persist(lab)
     sizes = lab.groupBy("comp").agg(F.count("*").alias("n"))
     small = sizes.filter(F.col("n") < threshold).select("comp")
     # adjacency: neighbors (per connectedness) with different labels
@@ -637,8 +635,18 @@ def _tile_ccl(pdf: pd.DataFrame, tile: int, width: int,
     return out
 
 
+# label_pixels union-finds up to this many label edges on the driver
+LABEL_DRIVER_MAX_EDGES = 2_000_000
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free a localCheckpoint's blocks: they sit in the persisted RDD
+    under the plan's LogicalRDD, which DataFrame.unpersist never reaches."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
-                 connect: int = 4, materialize: bool = True) -> DataFrame:
+                 connect: int = 4) -> DataFrame:
     """Distributed 4/8-connected CCL: per-tile CCL (applyInPandas) then
     iterative cross-tile label union via border-edge equivalences.
     connect=8 adds both diagonal adjacencies (GDALPolygonize
@@ -679,8 +687,7 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
         | (F.col("py") % tile == 0) | (F.col("py") % tile == tile - 1)
     )
     border_px = labeled.filter(band).select("px", "py", "value", "label")
-    if materialize:
-        border_px = border_px.persist()
+    border_px = cache.persist(border_px)
 
     # border equivalence pairs: offsets whose neighbor can land in a
     # different tile (right/down for 4-conn, + both diagonals for 8)
@@ -734,7 +741,8 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
     # any raster this planet stores; if the fixed point is still not
     # reached we raise instead of silently emitting wrong components.
     n_edges = edges.count()
-    if n_edges <= 2_000_000:
+    changed = 0
+    if n_edges <= LABEL_DRIVER_MAX_EDGES:
         parent: dict = {}
 
         def find(x):
@@ -751,20 +759,16 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
                 # union by min so the root is the canonical min label
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        # the mapping below is built on the driver: the returned plan
-        # never reads `edges` again
-        edges.unpersist()
         rows = [(k, find(k)) for k in list(parent.keys())]
-        spark = pixels.sparkSession
-        if rows:
-            mapping = spark.createDataFrame(rows, "l1 bigint, root bigint")
-        else:
-            mapping = spark.createDataFrame([], "l1 bigint, root bigint")
+        mapping = pixels.sparkSession.createDataFrame(rows, "l1 bigint, root bigint")
     else:
+        # `nxt` joins `half` to itself, so an uncut plan grows ~4.5x a
+        # round (driver OOM by round 4): localCheckpoint each round, as
+        # contour.contour_rings does, and release the round it
+        # supersedes (the returned plan reads the last one)
         mapping = edges.select("l1").distinct().select(
             "l1", F.col("l1").alias("root")
-        ).cache()
-        changed = -1
+        ).localCheckpoint(eager=True)
         for _ in range(64):
             nbr = (
                 edges.join(mapping.withColumnRenamed("l1", "l2"), "l2")
@@ -785,7 +789,7 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
                 )
                 .select("l1", F.least(F.col("h.root"),
                                       F.coalesce("_rr", F.col("h.root"))).alias("root"))
-                .cache()
+                .localCheckpoint(eager=True)
             )
             changed = (
                 nxt.alias("n")
@@ -793,15 +797,19 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
                 .filter(F.col("n.root") != F.col("m.root"))
                 .count()
             )
+            _release_checkpoint(mapping)
             mapping = nxt
             if changed == 0:
                 break
-        if changed != 0:
-            raise RuntimeError(
-                "label_pixels: cross-tile label propagation did not converge "
-                f"in 64 doubling rounds ({changed} labels still changing) — "
-                "refusing to emit possibly-wrong component labels"
-            )
+    # both mappings are built by now (on the driver, or checkpointed):
+    # the returned plan never reads `edges` again
+    edges.unpersist()
+    if changed != 0:
+        raise RuntimeError(
+            "label_pixels: cross-tile label propagation did not converge "
+            f"in 64 doubling rounds ({changed} labels still changing) — "
+            "refusing to emit possibly-wrong component labels"
+        )
 
     return (
         labeled.join(F.broadcast(mapping), labeled["label"] == mapping["l1"], "left")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..sources import derive
 
 SCALE = 1000  # quantization: round(x*1000) keeps |dot|^2 and naa*nbb < 2^53
@@ -193,7 +194,7 @@ def ivf_multi_assign(corpus_q: DataFrame, cents: DataFrame,
 def ivf_dedup_pairs(
     embeddings: DataFrame, *, n_centroids: int = 8, n_assign: int = 2,
     cos_threshold_x10: int = 4, id_col: str = "vec_id",
-    vec: str = "embedding", materialize: bool = True,
+    vec: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at scale: candidates are
     pairs sharing an IVF bucket (each vector multi-assigned to its
@@ -213,11 +214,10 @@ def ivf_dedup_pairs(
     q = quantize(embeddings, id_col=id_col, vec=vec)
     assigned = ivf_multi_assign(q, cents, n_assign)
     n = assigned.withColumn("n2", _norm2("qvec"))
-    if materialize:
-        # the bucket self-join's two sides never hit ReusedExchange, so
-        # without this the quantize -> centroid-rank -> window pipeline
-        # (a shuffle + per-vector dot products) runs twice
-        n = n.persist()
+    # the bucket self-join's two sides never hit ReusedExchange, so
+    # without this the quantize -> centroid-rank -> window pipeline
+    # (a shuffle + per-vector dot products) runs twice
+    n = cache.persist(n)
     a = n.select(F.col("id").alias("id_a"), F.col("cent_id"),
                  F.col("qvec").alias("va"), F.col("n2").alias("naa"))
     b = n.select(F.col("id").alias("id_b"), F.col("cent_id"),

@@ -33,8 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TILE_SCHEMA = "ty bigint, tx bigint, payload array<double>"
-
 
 # ------------------------------------------------------------ conversions
 

@@ -100,7 +100,6 @@ def quadkey_to_xyz(df: DataFrame, quadkey_col: str = "quadkey") -> DataFrame:
     (inverse of gdal2tiles.py:517-530)."""
     qk = F.col(quadkey_col)
     z = F.length(qk)
-    digit = lambda i: (F.ascii(F.substring(qk, i, 1)) - F.lit(48))
     # aggregate over positions via expr (positions are data-dependent)
     # NB: guard z=0 — Spark's sequence(1, 0) yields a DESCENDING [1,0],
     # not an empty array, so build the position list with a when().

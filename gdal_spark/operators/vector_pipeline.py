@@ -28,11 +28,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-GEOM_SCHEMA = T.StructType([
-    T.StructField("xs", T.ArrayType(T.DoubleType())),
-    T.StructField("ys", T.ArrayType(T.DoubleType())),
-])
-
 
 def segmentize(df: DataFrame, max_length: float, xs: str = "xs", ys: str = "ys") -> DataFrame:
     """Insert vertices so no segment exceeds max_length (planar), the

@@ -180,9 +180,18 @@ def test_buffer_convex_area_identity(spark):
 
 
 def test_materialize_arms_identical(spark):
-    """materialize=True (persisted index reuse, lineage kept) and
-    =False must produce identical rows for every dedup family member —
-    pins the r5 DAG-recompute sweep as pure plan surgery."""
+    """Every operator that persists shared subtrees gives identical rows
+    with its action run inside a `cache.scope()` (cached subtrees reused)
+    and after the scope closed (nothing cached: the plan recomputes), and
+    no RDD persisted inside a scope outlives it — pins the r5
+    DAG-recompute sweep as pure plan surgery, with an owner for every
+    table it persists. RDD ids, not counts: Spark's ContextCleaner may
+    drop other tests' garbage-collected checkpoint RDDs at any time.
+    The raster is one no other test builds: Spark matches equal cached
+    plans across calls."""
+    from gdal_spark import cache
+    from gdal_spark.operators import raster
+
     rng = np.random.default_rng(42)
     vocab = [f"w{i}" for i in range(40)]
     docs = [
@@ -198,20 +207,31 @@ def test_materialize_arms_identical(spark):
         [(i, v) for i, v in enumerate(vecs)],
         "vec_id bigint, embedding array<double>",
     )
+    px = raster.synth_raster(spark, 40, 26, block=6, n_values=3)
     cases = [
-        lambda m: dedup.ngram_jaccard_pairs(df, n=2, threshold_pct=40,
-                                            materialize=m),
-        lambda m: dedup.minhash_lsh_pairs(df, n_hashes=16, bands=4,
-                                          materialize=m),
-        lambda m: dedup.simhash_near_pairs(df, max_hamming=6,
-                                           materialize=m),
-        lambda m: similarity.ivf_dedup_pairs(emb, n_centroids=4,
-                                             cos_threshold_x10=3,
-                                             materialize=m),
+        lambda: dedup.ngram_jaccard_pairs(df, n=2, threshold_pct=40),
+        lambda: dedup.minhash_lsh_pairs(df, n_hashes=16, bands=4),
+        lambda: dedup.simhash_near_pairs(df, max_hamming=6),
+        lambda: similarity.ivf_dedup_pairs(emb, n_centroids=4,
+                                           cos_threshold_x10=3),
+        lambda: raster.label_pixels(px, width=40, tile=16),
+        lambda: raster.sieve_filter(px, width=40, threshold=40, tile=16),
     ]
+
+    def persisted():
+        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
     for make in cases:
-        a = make(True).toPandas()
-        b = make(False).toPandas()
+        before = persisted()
+        with cache.scope():
+            a = make().toPandas()
+            assert persisted() - before
+        assert persisted() <= before
+        with cache.scope():
+            out = make()
+        assert persisted() <= before
+        b = out.toPandas()
+        assert persisted() <= before
         cols = sorted(a.columns)
         a = a[cols].sort_values(cols).reset_index(drop=True)
         b = b[cols].sort_values(cols).reset_index(drop=True)

@@ -274,12 +274,14 @@ def test_nodata_to_alpha(spark):
     assert out2 == {0: 255, 1: 255, 2: 0}
 
 
-def test_label_pixels_random_raster_matches_bruteforce(spark):
+def test_label_pixels_random_raster_matches_bruteforce(spark, monkeypatch):
     """Random-value raster: distributed border-band CCL stitch must
     reproduce a driver-side union-find exactly (comp = min pid per
     component), for 4- and 8-conn and a tile size that does NOT divide
     the raster — pins the r5 border-band stitch (every cross-tile
-    equivalence endpoint lies within 1 px of a tile line)."""
+    equivalence endpoint lies within 1 px of a tile line). The last
+    input lowers the driver union-find limit to 0, so the label graph
+    resolves through the Spark min-label propagation loop."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -315,26 +317,37 @@ def test_label_pixels_random_raster_matches_bruteforce(spark):
 
     from gdal_spark.operators import raster
 
-    for connect, tile in ((4, 16), (8, 16), (8, 13)):
+    driver = raster.LABEL_DRIVER_MAX_EDGES
+    for connect, tile, max_edges in ((4, 16, driver), (8, 16, driver),
+                                     (8, 13, driver), (8, 13, 0)):
+        monkeypatch.setattr(raster, "LABEL_DRIVER_MAX_EDGES", max_edges)
         got = raster.label_pixels(df, width=W, tile=tile,
                                   connect=connect).toPandas()
         exp = brute(connect)
         assert len(got) == W * H
         for r in got.itertuples():
-            assert exp[int(r.pid)] == int(r.comp), (connect, tile, r)
+            assert exp[int(r.pid)] == int(r.comp), (connect, tile, max_edges, r)
 
 
 def test_label_pixels_leaves_no_persisted_rdds(spark):
     """The cross-tile edge table is cached only while the driver
-    union-find reads it; the returned plan holds no cached RDD. The
-    raster is one no other test builds: Spark matches equal cached
-    plans across calls, so a shared one could hide a leak."""
+    union-find reads it, and the border band only until the caller's
+    `cache.scope()` exits; the returned plan holds no cached RDD. RDD
+    ids, not counts: Spark's ContextCleaner may drop other tests'
+    garbage-collected checkpoint RDDs at any time. The raster is one
+    no other test builds: Spark matches equal cached plans across
+    calls, so a shared one could hide a leak."""
+    from gdal_spark import cache
     from gdal_spark.operators import raster
 
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persisted():
+        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    before = persisted()
     px = raster.synth_raster(spark, 72, 40, block=10, n_values=3)
-    lab = raster.label_pixels(px, width=72, tile=16, materialize=False)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    with cache.scope():
+        lab = raster.label_pixels(px, width=72, tile=16)
+    assert persisted() <= before
     # 10-px blocks of 3 values: each block is one component
     assert lab.select("comp").distinct().count() == (72 // 10 + 1) * (40 // 10)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert persisted() <= before

@@ -83,3 +83,17 @@ def test_spark_plan_is_codegen_only(spark):
     df = TF.tile_columns(_doc_points(spark), zoom=12)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_quadkey_to_xyz_round_trips_assign_tiles(spark):
+    # quadkey -> (zoom, tx, ty_xyz) inverts assign_tiles, z0's empty
+    # quadkey included (Spark's sequence(1, 0) is not empty)
+    for zoom in (0, 1, 12, 24):
+        tiled = tiling.assign_tiles(_doc_points(spark, 500), zoom=zoom)
+        back = tiling.quadkey_to_xyz(
+            tiled.select("doc_index", "quadkey",
+                         F.col("tx").alias("tx0"), F.col("ty_xyz").alias("ty0")))
+        rows = back.collect()
+        assert len(rows) == 500
+        for r in rows:
+            assert (r["zoom"], r["tx"], r["ty_xyz"]) == (zoom, r["tx0"], r["ty0"]), r

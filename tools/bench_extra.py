@@ -10,62 +10,14 @@ Entries:
   headline_join_tile         the north-star workload (spatial join +
                              tile assignment over the synthesized
                              interleaved-doc table), default strategy
-                             (band-table exact stage) — same plan
-                             bench.py times
+                             (band-table exact stage) — bench.py's
+                             `headline` plan
   spatial_join_bigpoly_grouped  4096-vertex cover through the
                              no-broadcast grouped cogroup
 """
 from __future__ import annotations
 
-import os
-
-
-def _doc_path(spark, n_docs: int) -> str:
-    """Same materialized synthetic-doc cache bench.py uses."""
-    from gdal_spark.sources import docs
-
-    cache = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/root/repo/.bench_cache")
-    p = os.path.join(cache, f"docs_{n_docs}.parquet")
-    if not os.path.exists(p):
-        docs.synth_docs(spark, n_docs, partitions=64).write.mode(
-            "overwrite").parquet(p)
-    return p
-
-
-def _headline(spark, sf_dir):
-    from gdal_spark.operators import tiling
-    from gdal_spark.operators.spatial_join import (
-        spatial_join_points_in_polygons,
-    )
-    from gdal_spark.sources import polygons
-
-    n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
-    d = spark.read.parquet(_doc_path(spark, n_docs))
-    cov = polygons.countries64_cover(spark, res=6)
-    joined = spatial_join_points_in_polygons(
-        d, cov, res=6,
-        keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
-    )
-    tiled = tiling.assign_tiles(joined, zoom=12)
-    return tiled.select(
-        "doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
-
-
-def _bigpoly_grouped(spark, sf_dir):
-    from gdal_spark.operators.spatial_join import (
-        spatial_join_points_in_polygons,
-    )
-    from gdal_spark.sources import polygons
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    dense = polygons.countries64_dense_cover(spark, res=6, nv=4096)
-    pts = (
-        spark.read.parquet(_doc_path(spark, 2000000))
-        .limit(100_000).repartition(cpus)
-    )
-    return spatial_join_points_in_polygons(
-        pts, dense, res=6, strategy="shuffle", keep_point_cols=["doc_id"],
-    )
+from bench import bigpoly, headline
 
 
 def _rpc_dem(variant: str):
@@ -97,8 +49,8 @@ def _rpc_dem(variant: str):
 
 
 EXTRA = {
-    "headline_join_tile": _headline,
-    "spatial_join_bigpoly_grouped": _bigpoly_grouped,
+    "headline_join_tile": headline,
+    "spatial_join_bigpoly_grouped": bigpoly("shuffle"),
     "rpc_dem_inverse_broadcast": _rpc_dem("broadcast"),
     "rpc_dem_inverse_gather": _rpc_dem("gather"),
 }

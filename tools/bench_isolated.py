@@ -29,17 +29,12 @@ import json, os, sys, time
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 sys.path.insert(0, {repo!r})
 import __spark_entry__ as E
+from bench import force
+from gdal_spark import cache
 from gdal_spark.session import get_spark
-from pyspark.sql import functions as F
 
 name, sf_dir, cpus = sys.argv[1], sys.argv[2], sys.argv[3]
 spark = get_spark("bench-iso", master=f"local[{{cpus}}]")
-
-def force(df):
-    return df.select(
-        F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h"),
-        F.count("*").alias("n"),
-    ).collect()[0]
 
 qs = E.queries()
 if name in qs:
@@ -47,17 +42,18 @@ if name in qs:
 else:
     from tools.bench_extra import EXTRA   # bench-only workloads
     fn = EXTRA[name]
-force(fn(spark, sf_dir))          # warmup: codegen + UDF worker pool
+# each run in its own scope, so every rep times the COLD query
+# (CacheManager plan-matching would otherwise serve rep N the rep N-1
+# index tables and break comparability with the pre-persist r3/r4
+# records); a session-wide cache clear would also drop the io manifest
+with cache.scope():
+    force(fn(spark, sf_dir))      # warmup: codegen + UDF worker pool
 best = float("inf")
 for _ in range(2):
-    # clear persisted index tables so every rep times the COLD query
-    # (operators persist() shared subtrees since r5; CacheManager
-    # plan-matching would otherwise serve rep N the rep N-1 index and
-    # break comparability with the pre-persist r3/r4 records)
-    spark.catalog.clearCache()
-    t0 = time.time()
-    force(fn(spark, sf_dir))
-    best = min(best, time.time() - t0)
+    with cache.scope():
+        t0 = time.time()
+        force(fn(spark, sf_dir))
+        best = min(best, time.time() - t0)
 print(json.dumps({{"query": name, "sec": round(best, 3)}}))
 """
 
@@ -67,10 +63,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     names = sys.argv[1:] or DEFAULT
-    path0 = os.path.join(repo, "BENCH", "bench_isolated.json")
+    path = os.path.join(repo, "BENCH", "bench_isolated.json")
     out: dict[str, float] = {}
-    if os.path.exists(path0):  # merge: partial runs extend the record
-        with open(path0) as f:
+    if os.path.exists(path):  # merge: partial runs extend the record
+        with open(path) as f:
             out = json.load(f).get("queries", {})
     for name in names:
         r = subprocess.run(
@@ -85,7 +81,6 @@ def main() -> None:
         rec = json.loads(line[-1])
         out[rec["query"]] = rec["sec"]
         print(f"{name}: {rec['sec']}s (isolated)")
-    path = os.path.join(repo, "BENCH", "bench_isolated.json")
     with open(path, "w") as f:
         json.dump({"sf_dir": sf_dir, "cpus": int(cpus),
                    "mode": "one JVM per query, warmup + best-of-2",

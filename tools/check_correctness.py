@@ -46,6 +46,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as E
+    from gdal_spark import cache
     from gdal_spark.session import get_spark
 
     spark = get_spark("correctness", master=os.environ.get("GDAL_SPARK_MASTER", "local[8]"))
@@ -68,7 +69,8 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            got = fn(spark, sf_dir).toPandas()
+            with cache.scope():
+                got = fn(spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {ex}")
             failures.append(name)
