@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache
+
 # case -> list of segments, each segment = (edgeA, edgeB);
 # corners: bit0=v00, bit1=v10, bit2=v11, bit3=v01 (inside == value > L).
 # Saddle cases 5 and 10 are ambiguous; the reference disambiguates by
@@ -169,24 +171,24 @@ def contour_rings(segments: DataFrame, *, scale: float = 1048576.0,
         return (F.floor(F.col(x) * scale).cast("bigint") * F.lit(1 << 27)
                 + F.floor(F.col(y) * scale).cast("bigint"))
 
-    # localCheckpoint each round: a self-join loop otherwise DOUBLES
-    # the logical plan per iteration (exponential Catalyst analysis
-    # time — measured as the dominant cost, not the data)
-    e = segments.select(
+    # checkpoint each round: a self-join loop otherwise DOUBLES the
+    # logical plan per iteration (exponential Catalyst analysis time —
+    # measured as the dominant cost, not the data); the caller's
+    # cache.scope() releases the checkpoints
+    e = cache.checkpoint(segments.select(
         nid("x1", "y1").alias("src"), nid("x2", "y2").alias("dst"),
         "x1", "y1", "x2", "y2",
-    ).localCheckpoint(eager=True)
-    state = e.select(F.col("src").alias("nid"), F.col("dst").alias("nxt"),
-                     F.col("src").alias("lab")).localCheckpoint(eager=True)
+    ))
+    state = cache.checkpoint(e.select(F.col("src").alias("nid"), F.col("dst").alias("nxt"),
+                                      F.col("src").alias("lab")))
     for _ in range(rounds):
         a, b = state.alias("a"), state.alias("b")
-        state = (
+        state = cache.checkpoint(
             a.join(b, F.col("a.nxt") == F.col("b.nid"))
             .select(
                 F.col("a.nid").alias("nid"), F.col("b.nxt").alias("nxt"),
                 F.least(F.col("a.lab"), F.col("b.lab")).alias("lab"),
             )
-            .localCheckpoint(eager=True)
         )
     labs = state.select("nid", "lab")
     m = e.join(labs, e["src"] == labs["nid"]).select(

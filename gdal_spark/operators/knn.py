@@ -11,7 +11,10 @@ Stopping rule: after exploring every cell within Chebyshev cell-distance
 `s` of the query's cell, any unexplored point is at distance
 >= s * cell_width (the query may sit on its cell's edge; an unexplored
 cell at Chebyshev >= s+1 is >= s full cell widths away). So a query is
-DONE once its current kth-best distance <= s * cell_width.
+DONE once its current kth-best distance <= s * cell_width. The rule
+holds at every cell size, so `res` only sets the speed: each level too
+coarse puts 4x the candidates in a round, each level too fine costs at
+most one round more (and 4x the annulus cells the driver builds).
 
 Plan shape: the query projection is collected once (Spark computes its
 mercator and cell columns, so every distance is a Spark double). The
@@ -21,6 +24,10 @@ on the driver, and each round runs ONE Spark action:
   points(cell) --broadcast-join cell--> d2
                --union carried top-k--> row_number per query (d2, id) <= k
                --collect-->  driver compares each kth d2 with the bound
+The join key is one packed bigint cell id (`functions.tiles.cell`, the
+packing of the spatial join's `assign_cell`; the driver packs the
+annulus cells with the same formula), so the probe is Spark's
+LongHashedRelation, not a two-column UnsafeRow key.
 Queries are few relative to points (the gdalgrid model: one output grid
 node per cell vs millions of scattered points), so the query side is
 always the broadcast side and the big point table is NEVER shuffled or
@@ -42,11 +49,37 @@ ORIGIN_SHIFT = TF.ORIGIN_SHIFT
 
 
 def _merc_cells(df: DataFrame, id_col: str, lon: str, lat: str, res: int, p: str) -> DataFrame:
-    """(_{p}id, _{p}mx, _{p}my, _{p}cx, _{p}cy): id, mercator meters, cell."""
+    """(_{p}id, _{p}mx, _{p}my, _{p}cell): id, mercator meters, packed cell id."""
     x, y = TF.quote(lon), TF.quote(lat)
-    cx, cy = TF.cell_xy(x, y, res)
     return df.selectExpr(f"{TF.quote(id_col)} AS _{p}id", f"{TF.merc_mx(x)} AS _{p}mx",
-                         f"{TF.merc_my(y)} AS _{p}my", f"{cx} AS _{p}cx", f"{cy} AS _{p}cy")
+                         f"{TF.merc_my(y)} AS _{p}my", f"{TF.cell(x, y, res)} AS _{p}cell")
+
+
+def _planned_rows(df: DataFrame) -> int | None:
+    """Rows of `df` from its optimized plan's statistics, with no job:
+    `rowCount` when Spark has it, else `sizeInBytes` over Spark's
+    per-row size (8 + the fields' default sizes). None when the size is
+    unknown — a source reporting `spark.sql.defaultSizeInBytes`, as a
+    `createDataFrame` input does — or when the plan reads more than one
+    source, whose size a join multiplies."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    stats = plan.stats()
+    if stats.rowCount().isDefined():
+        return int(str(stats.rowCount().get()))
+    leaves = plan.collectLeaves()
+    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    if leaves.size() != 1 or int(str(leaves.head().stats().sizeInBytes())) >= unknown:
+        return None
+    return int(str(stats.sizeInBytes())) // (8 + df._jdf.schema().defaultSize())
+
+
+def _auto_res(points: DataFrame, k: int) -> int:
+    """About 6k points per cell (4^res cells), clamped to [1, 16]; the
+    row count from plan statistics, `count()` only when they have none."""
+    n = _planned_rows(points)
+    if n is None:
+        n = points.count()
+    return min(16, max(1, round(math.log(max(n, 1) / (6 * k), 4))))
 
 
 def knn_join(
@@ -66,17 +99,26 @@ def knn_join(
     Returns (query_id, point_id, rank) with rank 1..k ordered by squared
     mercator-meter distance, ties by point_id; the id columns keep their
     input types and rank is int. Both inputs need lon/lat columns named
-    per the kw args. `res=None` derives the cell resolution from
-    `points.count()` and `k`. If `max_rounds` stops the
-    loop early, only the finished queries are returned.
+    per the kw args. If `max_rounds` stops the loop early, only the
+    finished queries are returned.
 
-    Caching: the operator owns no cache. `points` is evaluated once for
-    the count (when `res` is None) and once per round, `queries` once; a
-    caller with an expensive upstream plan persists it first.
+    `res=None` picks the cell resolution for about 6k points per cell,
+    from the row count in the optimized plan's statistics (a parquet
+    scan's file sizes, a range's length), so it runs no Spark job; only
+    an input of unknown size (e.g. from `createDataFrame`) is counted.
+    The estimate changes only the speed, never the result.
+
+    Each round joins the points to the pending queries' annulus cells
+    on one packed bigint cell id (`functions.tiles.cell`).
+
+    Caching: the operator owns no cache. `points` is evaluated once per
+    round (and once more for the count of an unknown-size input),
+    `queries` once; a caller with an expensive upstream plan persists
+    it first.
     """
     spark = points.sparkSession
-    if res is None:  # about 6k points per cell (4^res cells), clamped to [1, 16]
-        res = min(16, max(1, round(math.log(max(points.count(), 1) / (6 * k), 4))))
+    if res is None:
+        res = _auto_res(points, k)
     w = 2.0 * ORIGIN_SHIFT / float(2**res)
     lim = 2**res - 1
     if max_rounds is None:
@@ -86,8 +128,8 @@ def knn_join(
     qsdf = _merc_cells(queries, query_id, lon, lat, res, "q")
     qf, pf = qsdf.schema["_qid"], pts.schema["_pid"]
     pending = qsdf.toPandas()
-    qcells_schema = T.StructType(  # (_qid, _qmx, _qmy) + the ring cell
-        qsdf.schema.fields[:3] + [T.StructField(c, T.LongType(), False) for c in ("_cx", "_cy")])
+    qcells_schema = T.StructType(  # (_qid, _qmx, _qmy) + the packed ring cell
+        qsdf.schema.fields[:3] + [T.StructField("_cell", T.LongType(), False)])
     topk_schema = T.StructType([qf, pf, T.StructField("_d2", T.DoubleType(), False)])
     rank = F.expr("row_number() OVER (PARTITION BY _qid ORDER BY _d2, _pid)")
     d2 = F.expr("((_pmx - _qmx) * (_pmx - _qmx)) + ((_pmy - _qmy) * (_pmy - _qmy))")
@@ -105,15 +147,16 @@ def knn_join(
         dx, dy = (a.ravel() for a in np.meshgrid(r, r))
         ring = np.maximum(np.abs(dx), np.abs(dy)) > prev_s
         dx, dy = dx[ring], dy[ring]
-        qc = pending.loc[pending.index.repeat(len(dx))].assign(
-            _cx=(pending["_qcx"].to_numpy()[:, None] + dx).ravel(),
-            _cy=(pending["_qcy"].to_numpy()[:, None] + dy).ravel())
-        qc = qc[qc["_cx"].between(0, lim) & qc["_cy"].between(0, lim)]
-        qcells = spark.createDataFrame(qc[qcells_schema.names], qcells_schema)
-        cand = pts.join(
-            F.broadcast(qcells),
-            F.expr("_pcx = _cx AND _pcy = _cy"),
-        ).select("_qid", "_pid", d2.alias("_d2"))
+        # functions.tiles.pack_cell is row-major, (1 << 2res) | cx << res
+        # | cy: a cell (dx, dy) away is the id plus dx << res plus dy
+        qcell = pending["_qcell"].to_numpy()[:, None]
+        cx, cy = ((qcell >> res) & lim) + dx, (qcell & lim) + dy
+        on = ((cx >= 0) & (cx <= lim) & (cy >= 0) & (cy <= lim)).ravel()
+        qc = pending.loc[pending.index.repeat(len(dx))[on], ["_qid", "_qmx", "_qmy"]].assign(
+            _cell=(qcell + (dx << res) + dy).ravel()[on])
+        qcells = spark.createDataFrame(qc, qcells_schema)
+        cand = pts.join(F.broadcast(qcells), F.expr("_pcell = _cell")).select(
+            "_qid", "_pid", d2.alias("_d2"))
         if not carried.empty:
             cand = cand.unionByName(spark.createDataFrame(carried, topk_schema))
         topk = cand.withColumn("_rank", rank).filter(f"_rank <= {k}").toPandas()

@@ -639,12 +639,6 @@ def _tile_ccl(pdf: pd.DataFrame, tile: int, width: int,
 LABEL_DRIVER_MAX_EDGES = 2_000_000
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint's blocks: they sit in the persisted RDD
-    under the plan's LogicalRDD, which DataFrame.unpersist never reaches."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
 def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
                  connect: int = 4) -> DataFrame:
     """Distributed 4/8-connected CCL: per-tile CCL (applyInPandas) then
@@ -763,12 +757,11 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
         mapping = pixels.sparkSession.createDataFrame(rows, "l1 bigint, root bigint")
     else:
         # `nxt` joins `half` to itself, so an uncut plan grows ~4.5x a
-        # round (driver OOM by round 4): localCheckpoint each round, as
-        # contour.contour_rings does, and release the round it
-        # supersedes (the returned plan reads the last one)
-        mapping = edges.select("l1").distinct().select(
-            "l1", F.col("l1").alias("root")
-        ).localCheckpoint(eager=True)
+        # round (driver OOM by round 4): checkpoint each round, as
+        # contour.contour_rings does; the caller's scope releases them
+        # (the returned plan reads the last one)
+        mapping = cache.checkpoint(edges.select("l1").distinct().select(
+            "l1", F.col("l1").alias("root")))
         for _ in range(64):
             nbr = (
                 edges.join(mapping.withColumnRenamed("l1", "l2"), "l2")
@@ -780,7 +773,7 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
                 .agg(F.min("root").alias("root"))
             )
             # pointer doubling: root <- root's root
-            nxt = (
+            nxt = cache.checkpoint(
                 half.alias("h")
                 .join(
                     half.select(F.col("l1").alias("_r"), F.col("root").alias("_rr")),
@@ -789,7 +782,6 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
                 )
                 .select("l1", F.least(F.col("h.root"),
                                       F.coalesce("_rr", F.col("h.root"))).alias("root"))
-                .localCheckpoint(eager=True)
             )
             changed = (
                 nxt.alias("n")
@@ -797,7 +789,6 @@ def label_pixels(pixels: DataFrame, *, width: int, tile: int = 64,
                 .filter(F.col("n.root") != F.col("m.root"))
                 .count()
             )
-            _release_checkpoint(mapping)
             mapping = nxt
             if changed == 0:
                 break

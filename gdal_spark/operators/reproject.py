@@ -8,8 +8,8 @@ Here:
   exact closed-form column math (gdal2tiles.py:422-443 formulas) —
   whole-stage codegen, no UDF at all.
 - EPSG:4326 <-> UTM (326xx) is the closed-form 6th-order Krüger
-  series (kernels.tmerc — the same algorithm as PROJ's etmerc) inside
-  an Arrow-batched pandas UDF: utm_forward_cols / utm_inverse_cols.
+  series (kernels.tmerc — the same algorithm as PROJ's etmerc) as
+  codegen column math: utm_forward_cols / utm_inverse_cols.
   This covers the reference's own ogr2ogr benchmark CRS pair
   (32631 -> 4326) without any external wheel.
 - Other arbitrary CRS pairs go through pyproj (same PROJ underneath
@@ -100,38 +100,6 @@ def approx_transform_line(xs: "np.ndarray", fn, *, tol: float,
     return np.concatenate([left, right[1:]])
 
 
-def utm_forward_cols(df: DataFrame, zone: int, lon: str = "lon",
-                     lat: str = "lat", impl: str = "sql") -> DataFrame:
-    """Geographic -> UTM (EPSG:326xx) over the closed-form Krüger
-    series (kernels.tmerc) — the engine's native path for the
-    reference's single most common ogr2ogr case (32631<->4326,
-    autotest/benchmark/test_ogr2ogr.py:61-66; batch Transform API
-    ogrct.cpp:2254). Adds (easting, northing).
-
-    impl='sql' (default): the series as Spark SQL column expressions —
-    the whole transform runs JVM-side in whole-stage codegen, zero
-    Python in the plan (~10x the Arrow-UDF path at local[32]).
-    impl='arrow': the numpy kernel behind an Arrow-batched pandas UDF
-    (the reference's batch-Transform API shape, kept as the
-    cross-check twin). Both consume the identical coefficient
-    literals; differences are libm-ulp only, absorbed by the mm
-    rounding at the query contract."""
-    from ..kernels import tmerc
-
-    if impl == "sql":
-        return _utm_forward_sql(df, zone, lon, lat)
-
-    @F.pandas_udf("struct<easting:double, northing:double>")
-    def _fwd(lon_s: pd.Series, lat_s: pd.Series) -> pd.DataFrame:
-        e, n = tmerc.utm_forward(lon_s.to_numpy(), lat_s.to_numpy(), zone)
-        return pd.DataFrame({"easting": e, "northing": n})
-
-    res = df.withColumn("_en", _fwd(F.col(lon), F.col(lat)))
-    return res.withColumn("easting", F.col("_en.easting")).withColumn(
-        "northing", F.col("_en.northing")
-    ).drop("_en")
-
-
 def _angle_multiple_stages(s: DataFrame, base: str, pre: str) -> DataFrame:
     """Add sin/cos of 2j*base for j=1..6 as columns {pre}s{j}/{pre}c{j}
     via the angle-addition recurrence off sin/cos(2*base) — two
@@ -167,8 +135,15 @@ def _hyper_multiple_exprs(bcol: str, bicol: str) -> tuple[list[str], list[str]]:
     return sh, ch
 
 
-def _utm_forward_sql(df: DataFrame, zone: int, lon: str, lat: str) -> DataFrame:
-    """Forward Krüger series as pure codegen column math (coefficients
+def utm_forward_cols(df: DataFrame, zone: int, lon: str = "lon",
+                     lat: str = "lat") -> DataFrame:
+    """Geographic -> UTM (EPSG:326xx) over the closed-form Krüger
+    series (kernels.tmerc) — the engine's native path for the
+    reference's single most common ogr2ogr case (32631<->4326,
+    autotest/benchmark/test_ogr2ogr.py:61-66; batch Transform API
+    ogrct.cpp:2254). Adds (easting, northing).
+
+    Pure codegen column math, no Python in the plan (coefficients
     from kernels.tmerc — the identical literals the numpy kernel and
     the DuckDB oracle consume). Transcendental-minimized: the twelve
     cosh/sinh(2j*eta') collapse to power products of ONE exp, the
@@ -210,29 +185,10 @@ def _utm_forward_sql(df: DataFrame, zone: int, lon: str, lat: str) -> DataFrame:
 
 
 def utm_inverse_cols(df: DataFrame, zone: int, easting: str = "easting",
-                     northing: str = "northing", impl: str = "sql") -> DataFrame:
-    """UTM -> geographic (inverse Krüger series + unrolled Newton);
-    adds (lon_inv, lat_inv). impl as in utm_forward_cols."""
-    from ..kernels import tmerc
-
-    if impl == "sql":
-        return _utm_inverse_sql(df, zone, easting, northing)
-
-    @F.pandas_udf("struct<lon:double, lat:double>")
-    def _inv(e_s: pd.Series, n_s: pd.Series) -> pd.DataFrame:
-        lo, la = tmerc.utm_inverse(e_s.to_numpy(), n_s.to_numpy(), zone)
-        return pd.DataFrame({"lon": lo, "lat": la})
-
-    res = df.withColumn("_ll", _inv(F.col(easting), F.col(northing)))
-    return res.withColumn("lon_inv", F.col("_ll.lon")).withColumn(
-        "lat_inv", F.col("_ll.lat")
-    ).drop("_ll")
-
-
-def _utm_inverse_sql(df: DataFrame, zone: int, easting: str,
-                     northing: str) -> DataFrame:
-    """Inverse Krüger series + 3 unrolled Newton steps (Karney eq.
-    19-21) as codegen column math, transcendental-minimized like the
+                     northing: str = "northing") -> DataFrame:
+    """UTM -> geographic; adds (lon_inv, lat_inv). Inverse Krüger
+    series + 3 unrolled Newton steps (Karney eq. 19-21) as codegen
+    column math, transcendental-minimized like the
     forward path. Each Newton sig = sinh(ecc*atanh(x)) folds to
     (z - 1/z)/2 with z = ((1+x)/(1-x))^(ecc/2) — one pow per step."""
     from ..kernels import tmerc as TM

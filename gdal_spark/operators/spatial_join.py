@@ -57,6 +57,8 @@ parity with the reference's staged semantics).
 
 from __future__ import annotations
 
+import weakref
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -747,6 +749,35 @@ def _band_condition(lon: str, lat: str, k: int) -> Column:
                   f" AND {x} >= _band_minx AND {x} <= _band_maxx AND {odd}")
 
 
+# {cover DataFrame: {(res, extra poly cols): _broadcast_side result}}.
+# A DataFrame's plan never changes, so its collected side is reused for
+# as long as the caller holds the cover object.
+_SIDES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _broadcast_side(cover: DataFrame, res: int, extra: list[str]):
+    """The broadcast arm's polygon side, built once per cover object and
+    (res, extra): (band table DataFrame, k, None), or (None, None, ring
+    dict broadcast) for the Arrow engine. Collected once and pinned: to
+    pick up changed polygon data, pass a fresh cover DataFrame."""
+    memo = _SIDES.setdefault(cover, {})
+    key = (res, tuple(extra))
+    if key not in memo:
+        rings, keys = _collect_cover(cover, res, extra)
+        bands = _band_table(keys, rings, res) if _bands_fit(keys, rings, res) else None
+        if bands is None:
+            memo[key] = None, None, cover.sparkSession.sparkContext.broadcast(rings)
+        else:
+            pdf, k = bands
+            fields = {f.name: f for f in cover.schema.fields}
+            schema = T.StructType(
+                [fields[c] for c in _KEY_COLS[:2] + extra]
+                + [T.StructField(c, T.DoubleType(), False)
+                   for c in pdf.columns[2 + len(extra):]])
+            memo[key] = cover.sparkSession.createDataFrame(pdf, schema), k, None
+    return memo[key]
+
+
 def spatial_join_points_in_polygons(
     points: DataFrame,
     cover: DataFrame,
@@ -765,6 +796,10 @@ def spatial_join_points_in_polygons(
     covering cells at the same `res`.
     Returns the point columns + poly_id for every (point, polygon) pair
     whose point lies inside the polygon.
+
+    The 'broadcast' arm collects the cover once per cover object, `res`
+    and `keep_poly_cols`, and reuses it in later joins with the same
+    object; pass a fresh cover DataFrame to pick up changed polygons.
     """
     _check_strategy(strategy)
     pts = assign_cell(points, lon, lat, res)
@@ -778,25 +813,16 @@ def spatial_join_points_in_polygons(
             pts, cover, lon=lon, lat=lat, keep=keep, keep_poly=keep_poly)
 
     extra = [c for c in keep_poly if c not in _KEY_COLS]
-    rings, keys = _collect_cover(cover, res, extra)
-    bands = _band_table(keys, rings, res) if _bands_fit(keys, rings, res) else None
-    if bands is not None:
+    table, k, rings_bc = _broadcast_side(cover, res, extra)
+    if table is not None:
         # band-table form: the exact test is column arithmetic in the
         # broadcast hash join's codegen stage, no Python
-        pdf, k = bands
-        fields = {f.name: f for f in cover.schema.fields}
-        schema = T.StructType(
-            [fields[c] for c in _KEY_COLS[:2] + extra]
-            + [T.StructField(c, T.DoubleType(), False)
-               for c in pdf.columns[2 + len(extra):]])
-        table = cover.sparkSession.createDataFrame(pdf, schema)
         return (pts.join(F.broadcast(table), "cell")
                 .filter(_band_condition(lon, lat, k))
                 .select(*keep, *keep_poly))
     # broadcast-dict form: candidates carry only poly_id into the Arrow
     # exact stage (after the JVM envelope short circuit); rings cross
     # to each executor once
-    rings_bc = cover.sparkSession.sparkContext.broadcast(rings)
     pip_pred = _pip_dict_udf(rings_bc)(F.col(lon), F.col(lat), F.col("poly_id"))
     return (pts.join(F.broadcast(cover.drop("xs", "ys")), "cell")
             .filter(_envelope(lon, lat)).filter(pip_pred)

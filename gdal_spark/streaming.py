@@ -5,8 +5,8 @@ The reference is a batch engine (SURVEY §2.13 — no streaming
 operators), so this is an ENGINE EXTENSION, not parity: the same
 codegen'd tile/cell projections compose unchanged onto a streaming
 DataFrame (readStream -> withColumn chain -> writeStream), because
-tile assignment is stateless per row. Stateful pieces (windowed tile
-counts) use standard watermark + window aggregation.
+tile assignment is stateless per row. The stateful piece (streaming
+dedup) keeps per-key state with applyInPandasWithState.
 
 Use cases: continuous ingestion of new documents into the tile-indexed
 Iceberg table; the checkpointLocation gives exactly-once appends —
@@ -43,20 +43,6 @@ def stream_tile_assign(stream_df: DataFrame, zoom: int = 8) -> DataFrame:
     """Stateless tile assignment on a stream — identical column math to
     the batch operator (operators.tiling.assign_tiles)."""
     return tiling.assign_tiles(stream_df, zoom=zoom)
-
-
-def stream_tile_counts(stream_df: DataFrame, *, zoom: int = 5,
-                       window: str = "10 seconds",
-                       watermark: str = "30 seconds") -> DataFrame:
-    """Windowed per-tile doc counts with late-data watermarking — the
-    streaming analog of tile_counts/pyramid base construction."""
-    tiled = tiling.assign_tiles(stream_df, zoom=zoom)
-    return (
-        tiled.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("quadkey"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "quadkey", "cnt")
-    )
 
 
 def stream_dedup_stateful(stream_df: DataFrame, *, timeout_ms: int = 600000) -> DataFrame:
@@ -131,10 +117,9 @@ def stream_spatial_join(stream_df: DataFrame, cover: DataFrame, *,
     broadcast (the band table, or the ring dict on dense covers), and
     the exact PIP test is per-row — so the same plan
     that runs the batch flagship runs continuously with exactly-once
-    sink semantics from the checkpoint. The one structural difference
-    vs batch: the static side is collected ONCE at query start and
-    pinned for the stream's lifetime (reference a fresh cover to pick
-    up polygon updates)."""
+    sink semantics from the checkpoint. As in batch, the static side is
+    collected once per cover object and pinned for the stream's
+    lifetime (reference a fresh cover to pick up polygon updates)."""
     from .operators.spatial_join import spatial_join_points_in_polygons
 
     return spatial_join_points_in_polygons(

@@ -71,31 +71,26 @@ def test_approx_transform_exact_at_zero_tolerance_probes():
     np.testing.assert_allclose(out, f(xs), atol=1e-9)
 
 
-def test_utm_sql_impl_matches_arrow_impl_and_is_python_free(spark):
-    # the codegen column path and the numpy/Arrow path consume the same
-    # kernels.tmerc literals; they may differ only at libm-ulp level
+def test_utm_sql_matches_numpy_kernel_and_is_python_free(spark):
+    # the codegen column path consumes the kernels.tmerc literals; it
+    # may differ from the numpy kernel only at libm-ulp level
     import numpy as np
-    from pyspark.sql import functions as F
+
+    from gdal_spark.kernels import tmerc
 
     pts = spark.range(5000).selectExpr(
         "id",
         "CAST(-0.9 + (id % 617) / 350.0 AS DOUBLE) AS lon",
         "CAST(36.0 + (id % 401) / 67.0 AS DOUBLE) AS lat",
     )
-    a = reproject.utm_inverse_cols(
-        reproject.utm_forward_cols(pts, 31, impl="sql"), 31, impl="sql"
-    ).orderBy("id").toPandas()
-    b = reproject.utm_inverse_cols(
-        reproject.utm_forward_cols(pts, 31, impl="arrow"), 31, impl="arrow"
-    ).orderBy("id").toPandas()
-    assert np.abs(a["easting"] - b["easting"]).max() < 1e-6   # meters
-    assert np.abs(a["northing"] - b["northing"]).max() < 1e-6
-    assert np.abs(a["lon_inv"] - b["lon_inv"]).max() < 1e-11  # degrees
-    assert np.abs(a["lat_inv"] - b["lat_inv"]).max() < 1e-11
-    # the sql plan must be pure JVM: no Python evaluation nodes at all
-    plan = (
-        reproject.utm_inverse_cols(
-            reproject.utm_forward_cols(pts, 31, impl="sql"), 31, impl="sql")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    rt = reproject.utm_inverse_cols(reproject.utm_forward_cols(pts, 31), 31)
+    a = rt.orderBy("id").toPandas()
+    e, n = tmerc.utm_forward(a["lon"].to_numpy(), a["lat"].to_numpy(), 31)
+    lon, lat = tmerc.utm_inverse(a["easting"].to_numpy(), a["northing"].to_numpy(), 31)
+    assert np.abs(a["easting"] - e).max() < 1e-6   # meters
+    assert np.abs(a["northing"] - n).max() < 1e-6
+    assert np.abs(a["lon_inv"] - lon).max() < 1e-11  # degrees
+    assert np.abs(a["lat_inv"] - lat).max() < 1e-11
+    # the plan must be pure JVM: no Python evaluation nodes at all
+    plan = rt._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Arrow" not in plan

@@ -91,6 +91,21 @@ def test_every_point_in_at_most_one_plain_polygon(spark, oracle_plain):
     assert len(oracle_plain) > 100  # non-trivial fixture
 
 
+def test_docs_from_table_matches_synth_docs(spark, oracle_plain):
+    """Points derived from any integer id column (the driver-contract
+    tables' keys) are the synth_docs rows of the same index, so their
+    join is the oracle's."""
+    table = spark.range(N_DOCS).selectExpr("CAST(id AS INT) AS k", "id % 7 AS other")
+    got = docs.docs_from_table(table, "k")
+    assert got.columns == ["k", "other", "lon", "lat"]
+    want = docs.synth_docs(spark, N_DOCS).selectExpr("doc_index AS k", "lon", "lat")
+    assert (sorted(map(tuple, got.select("k", "lon", "lat").collect()))
+            == sorted(map(tuple, want.collect())))
+    out = spatial_join_points_in_polygons(
+        got, polygons.countries64_cover(spark, res=6), res=6, keep_point_cols=["k"])
+    assert sorted((r["k"], r["poly_id"]) for r in out.collect()) == oracle_plain
+
+
 def test_span_sequence_preserved_through_join(spark):
     """The ogr_gensql native-data invariant: span sequences survive the
     join byte-for-byte (reference ogr_gensql.cpp:1536-1538)."""
